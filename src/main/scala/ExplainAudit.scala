@@ -13,14 +13,8 @@ object ExplainAudit {
                                cartesian: Int, codegen: Int, pushed: Boolean,
                                rows: Long)
 
-  def auditSession(): SparkSession = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+  /** `local[8]`: `tools/plan_baseline.json` was recorded at 8 cores. */
+  def auditSession(): SparkSession = graft.Harness.session(8)
 
   /** Physical-plan metrics for one declared batch query. Executes the
     * query once (AQE finalizes the plan only on execution). */

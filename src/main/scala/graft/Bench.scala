@@ -128,35 +128,26 @@ object Bench {
     mn > 0 && times.max / mn > 3.0
   }
 
+  /** The `sf` number the bench line records (0.1 for an
+    * `…/sf0.1` directory), or None when the directory has no `sf<number>`
+    * suffix — the line then says `null`, never a real-looking scale. */
+  def sfNumber(sfDir: String): Option[String] =
+    "sf([0-9.]+)$".r.findFirstMatchIn(sfDir).map(_.group(1))
+      .filter(s => scala.util.Try(s.toDouble).isSuccess)
+
+  /** The longest prefix of `entries` (rendered, slowest first) whose
+    * comma-joined length fits `room` chars. A prefix, never a selection:
+    * a slow query with a long name that does not fit ends the list rather
+    * than making room for faster ones behind it. */
+  def fitPrefix(entries: Seq[String], room: Int): Seq[String] =
+    entries.zip(entries.scanLeft(0)(_ + _.length + 1).tail)
+      .takeWhile(_._2 <= room).map(_._1)
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup so the first timed query doesn't absorb JIT cost.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    // Parquet-reader warmup: the vectorized reader + footer machinery class-
-    // loads on first touch (~1s), which otherwise lands on whichever query
-    // sorts first. region is 5 rows — the read itself is free.
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
-    // Streaming warmup: one throwaway micro-batch query loads the
-    // StreamExecution/state-store machinery (class loading + codegen)
-    // outside any timed window.
-    try {
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = ms.toDS().groupBy($"value").count()
-        .writeStream.outputMode("complete").format("memory").queryName("warmup").start()
-      ms.addData(1L, 2L, 3L)
-      q.processAllAvailable(); q.stop()
-    } catch { case _: Throwable => () }
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
+    Harness.warmUp(spark, sfDir)
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0 // Double.toString is locale-safe
     // Calibration probes bracket AND interleave the suite: endpoint-only
     // bracketing is blind to load that arrives and leaves mid-run (the
@@ -181,26 +172,31 @@ object Bench {
     // (GC pauses, state-store maintenance threads, box load). The recorded
     // per-query number is the median; the total is the sum of medians —
     // i.e. the suite cost of one steady-state pass, which is the quantity
-    // BASELINE.md anchors. Cleanup (CacheBag drain) runs BLOCKING and
-    // OUTSIDE the timed window, so one query's cache eviction can neither
-    // inflate its own time nor bleed into the next query's.
+    // BASELINE.md anchors. A query that throws is not timed at all: it
+    // stops its reps, goes into the dump's `failed` list, stays out of
+    // `total`, and makes the process exit non-zero.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Optional name filter for iterating on one query's timing without the
     // full 120-query suite (comma-separated exact names).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val perRep = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val perRep = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
       .zipWithIndex
-      .map { case ((name, fn), i) =>
+      .flatMap { case (name, i) =>
       if (i > 0 && i % probeEvery == 0) sampleProbes()
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        CacheBag.drain(blocking = true) // untimed: release query-local caches
-        dt
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var error = Option.empty[Throwable]
+      while (times.length < reps && error.isEmpty)
+        Harness.run(spark, name, sfDir) match {
+          case Right(t) => times += t.seconds
+          case Left(e) => error = Some(e)
+        }
+      error.foreach { e =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
       }
-      name -> times
+      if (error.isEmpty) Some(name -> times.toSeq) else None
     }
     sampleProbes()
     val probeEnd = probeSamples.last
@@ -257,8 +253,9 @@ object Bench {
       .mkString("{", ",", "}")
     val suspectJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
     val hazeJson = hazeSuspects.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",$probeJson,"queries":$medianJson,"reps":$repsJson,"mins":$minsJson,"suspect":$suspectJson,"haze_suspect":$hazeJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",$probeJson,"queries":$medianJson,"reps":$repsJson,"mins":$minsJson,"suspect":$suspectJson,"haze_suspect":$hazeJson,"failed":$failedJson}"""
     // Per-run default path stamped with the cpu count: the driver benches
     // the suite at BOTH 32 and 8 cpus, and a shared default name let the
     // second run overwrite the first's full dump (the r14 judge lost the
@@ -279,8 +276,7 @@ object Bench {
       }
     // The driver's own BENCH artifact records sf as a NUMBER (0.1); emit
     // the same, with the directory kept separately for humans.
-    val sfNum = "sf([0-9.]+)$".r.findFirstMatchIn(sfDir).map(_.group(1))
-      .filter(s => scala.util.Try(s.toDouble).isSuccess).getOrElse("0")
+    val sfNum = sfNumber(sfDir).getOrElse("null")
     // Fill "queries" with as many slowest-first entries as fit a fixed
     // line budget: the driver keeps only a ~2000-char output tail, so the
     // WHOLE line (plus sbt's trailing "[success] ..." line) must sit
@@ -293,15 +289,12 @@ object Bench {
     val head = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},$probeJson,"queries":"""
     val tailFixed = s""","full":$fullRef,"sf":$sfNum,"sf_dir":"$sfDir"}"""
     val fixedLen = head.length + tailFixed.length + 2 // "{" + "}"
-    val picked = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = fixedLen
-    slowestSorted.foreach { e =>
-      if (used + e.length + 1 <= lineBudget) { picked += e; used += e.length + 1 }
-    }
+    val picked = fitPrefix(slowestSorted, lineBudget - fixedLen)
     val line = head + picked.mkString("{", ",", "}") + tailFixed
     spark.stop()
     // Printed LAST, after spark.stop(), so no Spark shutdown warning can
     // land between the line and the end of the captured tail.
     println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -49,6 +49,9 @@ object CacheBag {
     try checkpointRdd(df).foreach(_.unpersist(blocking))
     catch { case _: Throwable => () }
 
+  /** True when no frame or checkpoint is waiting for a drain. */
+  def isEmpty: Boolean = frames.isEmpty && rdds.isEmpty
+
   /** Unpersist every registered frame and empty the bag.
     *
     * `blocking = true` is for timed harnesses (Bench): a non-blocking drain

@@ -2,13 +2,12 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round evidence dumper: writes `.explain("formatted")` for
-  * named declared queries to `plans/<tag>/<query>_<suffix>.txt`, mirroring
-  * Bench's session config (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
-  * cpus) so the captured plan is the one the bench actually runs.
+  * named declared queries to `plans/<tag>/<query>_<suffix>.txt`, on
+  * Bench's session ([[Harness.session]]) so the captured plan is the one
+  * the bench actually runs.
   *
   *   sbt "runMain graft.PlanDump r14 before q180_bloom_decontamination ..."
   *
@@ -19,15 +18,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query...>")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)
     names.foreach { name =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Scale measurement harness (SCALE.md evidence run): runs named
@@ -46,44 +45,32 @@ object ScaleBench {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val meter = new WorkMeter
     spark.sparkContext.addSparkListener(meter)
-
-    // warmups outside any timed window (JIT, parquet reader, streaming)
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
+    Harness.warmUp(spark, sfDir)
 
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     var totalWall = 0.0
     names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"""{"query":"$name","error":"unknown"}""")
-        case Some(fn) =>
-          // rep 0 warms caches/JIT for the chain; measured = min of reps
-          val walls = (1 to reps).map { i =>
-            if (i == reps) { // meter only the LAST rep (steady state)
-              org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-              meter.reset()
-            }
-            val t0 = System.nanoTime()
-            val rows = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-            val dt = (System.nanoTime() - t0) / 1e9
-            CacheBag.drain(blocking = true)
-            (dt, rows)
-          }
+      // rep 0 warms caches/JIT for the chain; measured = min of reps. A
+      // query with a rep that throws prints an error record instead.
+      val runs = (1 to reps).map { i =>
+        if (i == reps) { // meter only the LAST rep (steady state)
           org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-          val wall = walls.map(_._1).min
+          meter.reset()
+        }
+        Harness.run(spark, name, sfDir)
+      }
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      runs.collectFirst { case Left(e) => e } match {
+        case Some(e) =>
+          println(s"""{"query":"$name","error":${Harness.json(e.toString)}}""")
+        case None =>
+          val timed = runs.collect { case Right(t) => t }
+          val wall = timed.map(_.seconds).min
           totalWall += wall
-          println(s"""{"query":"$name","wall_s":${r3(wall)},"rows":${walls.last._2},""" +
+          println(s"""{"query":"$name","wall_s":${r3(wall)},"rows":${timed.last.rows},""" +
             s""""shuffle_read_mb":${r3(meter.shuffleRead.get / 1e6)},""" +
             s""""shuffle_write_mb":${r3(meter.shuffleWrite.get / 1e6)},""" +
             s""""input_mb":${r3(meter.inputBytes.get / 1e6)},""" +

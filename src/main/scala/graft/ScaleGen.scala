@@ -43,14 +43,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def write(df: DataFrame, name: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite")

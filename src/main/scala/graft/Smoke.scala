@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: exercises the driver's t1 contract surface —
   * `SparkEntry.entry` on sf0.001 must return >0 rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.metrics.PromQlParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -67,4 +68,10 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** `events` as a PromQL source: `event_type` is the metric name and
+    * (user_id, event_type) the series key — the binding of q100–q105. */
+  def eventsSrc(s: SparkSession, d: String): PromQlParser.PromSource =
+    PromQlParser.PromSource(events(s, d), "event_type",
+      Seq("user_id", "event_type"), "ts", "event_id", "value")
 }

@@ -2415,9 +2415,10 @@ object PromQlParser {
             // Reset-aware increases computed ONCE per series (adjacent
             // pairs are the same globally as within any contiguous time
             // window), then exploded onto the steps whose window holds
-            // BOTH pair endpoints — T in [t, prev_t + w) — which is
-            // exactly the instant-eval semantics where the window's first
-            // sample contributes 0.
+            // BOTH pair endpoints — T in [t, prev_t + w). This differs
+            // from instant eval on a window holding ONE sample: instant
+            // emits 0 (counterIncrease's first-sample baseline), while
+            // here no pair lands on the step, so it emits no row.
             val wSeries = Window.partitionBy(keyCols: _*)
               .orderBy(col(src.tsCol), col(src.orderCol))
             val inc = PromQl.counterIncrease(filtered, src.seriesKey,

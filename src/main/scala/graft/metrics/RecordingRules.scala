@@ -183,10 +183,11 @@ object RuleGroup {
     //   1. A record name NO rule reads (no pin on it, no read-all rule)
     //     can never influence a later evaluation, so its frames skip the
     //     in-loop materialization entirely and stay lazy until the final
-    //     output union — each such frame is consumed exactly once there,
-    //     so laziness costs no re-evaluation (q253: the 8 'purchase:lag'
-    //     checkpoints vanish; only the read 'purchase:tot' chain
-    //     materializes).
+    //     output union. They are recomputed on EVERY action over the
+    //     returned frame (a multi-rep timing loop recomputes them each
+    //     rep); a caller that runs several actions over it should cache
+    //     it (q253: the 8 'purchase:lag' checkpoints vanish; only the read
+    //     'purchase:tot' chain materializes).
     //   2. The in-loop localCheckpoint materializes ONLY the step's NEW
     //     frame; the visible storage is the lazy union of those
     //     checkpointed leaves. The previous form re-checkpointed the

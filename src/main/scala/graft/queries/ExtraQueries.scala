@@ -687,8 +687,7 @@ object ExtraQueries {
     // instants. `offset -1h` exercises the forward extent; `sum without`
     // the per-chunk vector aggregation.
     "q165_frontend_range_split" -> ((s, d) => {
-      val src = graft.metrics.PromQlParser.PromSource(events(s, d),
-        "event_type", Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       graft.metrics.QueryFrontend.evalRangeSplit(src,
           "sum without (user_id) (rate(purchase[6h] offset -1h))",
           "2024-01-14 00:00:00", "2024-01-15 00:00:00",
@@ -710,8 +709,7 @@ object ExtraQueries {
     // merge math, and the 4-way/3-way shapes stay spec-pinned in
     // QueryFrontendSpec) against ONE unsharded oracle.
     "q166_query_sharding" -> ((s, d) => {
-      val src = graft.metrics.PromQlParser.PromSource(events(s, d),
-        "event_type", Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(fn: String, n: Int, tag: String) =
         graft.metrics.QueryFrontend.evalRangeSharded(src,
             s"$fn without (user_id) (rate(purchase[6h]))",
@@ -1155,8 +1153,7 @@ object ExtraQueries {
     // partial-write, or chunk-boundary bug makes the warm face diverge.
     "q170_frontend_results_cache" -> ((s, d) => {
       import graft.metrics.QueryFrontend
-      val src = graft.metrics.PromQlParser.PromSource(events(s, d),
-        "event_type", Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       // tmpfs when available: the cache unit is chunk RESULTS (tiny);
       // fsync latency, not capacity, dominates a bench-sized store
       val base = new java.io.File("/dev/shm")
@@ -1184,8 +1181,7 @@ object ExtraQueries {
     // one instant evaluation broadcast across the step domain).
     "q172_grid_irate" -> ((s, d) => {
       import graft.metrics.{NativeHistogram, PromQlParser}
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.evalRange(src, q,
           "2024-01-14 00:00:00", "2024-01-15 00:00:00", stepSec = 10800)
@@ -1198,10 +1194,8 @@ object ExtraQueries {
             .filter(col("ts") <= col("mark")),
           Seq(col("mark"), col("event_type")), "value", 2),
         Seq("mark", "event_type"), 2)
-      val hsrc = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value",
-        hist = Some(PromQlParser.HistBinding(
-          cum, "event_type", Seq("event_type"), "mark", "mark")))
+      val hsrc = eventsSrc(s, d).copy(hist = Some(PromQlParser.HistBinding(
+        cum, "event_type", Seq("event_type"), "mark", "mark")))
       val ha = PromQlParser.evalRange(hsrc,
           """histogram_count({event_type=~".+"} @ 1704888000)""",
           "2024-01-10 06:00:00", "2024-01-11 00:00:00", stepSec = 21600)
@@ -1804,8 +1798,7 @@ object ExtraQueries {
     "q213_federate_roundtrip" -> ((s, d) => {
       import graft.metrics.{Exposition, MetricsServer, PromQlParser}
       import s.implicits._
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       val text = (0 until 8).map { h =>
         MetricsServer.federateText(src, Seq("""{event_type=~".+"}"""),
           f"2024-01-15 ${h * 3}%02d:03:00", Seq("env" -> "prod"), 100000)
@@ -2369,8 +2362,7 @@ object ExtraQueries {
     // hourly day grid (the canonical 5m/1h pair is degenerate at this
     // event density), SLO 99%, page=14.4 ticket=6.
     "q176_slo_burn_rate" -> ((s, d) => {
-      val src = graft.metrics.PromQlParser.PromSource(events(s, d),
-        "event_type", Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def cnt(sel: String, w: String, out: String) =
         graft.metrics.PromQlParser.evalRange(src,
             s"sum(count_over_time($sel[$w]))",

@@ -94,10 +94,8 @@ object NativeHistogramQueries {
             .filter(col("ts") <= col("mark")),
           Seq(col("mark"), col("event_type")), "value", Schema),
         Seq("mark", "event_type"), Schema)
-      val src = graft.metrics.PromQlParser.PromSource(events(s, d),
-        "event_type", Seq("user_id", "event_type"), "ts", "event_id", "value",
-        hist = Some(graft.metrics.PromQlParser.HistBinding(
-          cum, "event_type", Seq("event_type"), "mark", "mark")))
+      val src = eventsSrc(s, d).copy(hist = Some(graft.metrics.PromQlParser.HistBinding(
+        cum, "event_type", Seq("event_type"), "mark", "mark")))
       def run(q: String, tag: String) =
         graft.metrics.PromQlParser.evalRange(src, q,
           "2024-01-10 06:00:00", "2024-01-11 00:00:00", stepSec = 21600)
@@ -160,10 +158,8 @@ object NativeHistogramQueries {
             .filter(col("ts") <= col("mark")),
           Seq(col("mark"), col("event_type")), "value", Schema),
         Seq("mark", "event_type"), Schema)
-      val src = graft.metrics.PromQlParser.PromSource(events(s, d),
-        "event_type", Seq("user_id", "event_type"), "ts", "event_id", "value",
-        hist = Some(graft.metrics.PromQlParser.HistBinding(
-          cum, "event_type", Seq("event_type"), "mark", "mark")))
+      val src = eventsSrc(s, d).copy(hist = Some(graft.metrics.PromQlParser.HistBinding(
+        cum, "event_type", Seq("event_type"), "mark", "mark")))
       val T = "2024-01-11 00:00:00"
       val sel = """{event_type=~".+"}"""
       def one(q: String, out: Column, name: String) =

@@ -94,8 +94,7 @@ object PromQlQueries {
     // final round-9 is half-boundary-safe because the rate divisor 86400
     // carries a factor of 3 (non-terminating decimal quotient).
     "q100_promql_parse_topk" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src, "topk(3, rate(purchase[24h]))",
           "2024-01-15 12:00:00")
         .select(col("rank"), col("user_id"), col("event_type"),
@@ -106,8 +105,7 @@ object PromQlQueries {
     // Parser: anchored negative-regex matcher + range aggregation +
     // vector aggregation, one string.
     "q101_promql_parse_agg" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           """sum by (event_type) (max_over_time({event_type!~"err.*"}[12h]))""",
           "2024-01-15 12:00:00")
@@ -118,8 +116,7 @@ object PromQlQueries {
     // Parser: gauge delta (last − first per series over the window),
     // rolled up with the decimal discipline.
     "q102_promql_delta" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src, "sum by (event_type) (delta(signup[24h]))",
           "2024-01-15 12:00:00")
         .select(col("event_type"), round(col("value"), 4).as("value"))
@@ -129,8 +126,7 @@ object PromQlQueries {
     // Parser: irate (last-two-samples instantaneous rate, reset-aware);
     // max is order-insensitive so the rollup is FP-safe.
     "q103_promql_irate" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           """max by (event_type) (irate({event_type=~"click|view"}[24h]))""",
           "2024-01-15 12:00:00")
@@ -144,8 +140,7 @@ object PromQlQueries {
     // the inner join drops label-mismatched series — users with clicks but
     // no views vanish, exactly Prometheus.
     "q104_promql_binop_ratio" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           "sum by (user_id) (rate(click[24h])) / sum by (user_id) (rate(view[24h]))",
           "2024-01-15 12:00:00")
@@ -157,8 +152,7 @@ object PromQlQueries {
     // range spread (max_over_time − min_over_time), FP-order-safe since
     // max/min are order-insensitive and the difference is one subtraction.
     "q105_promql_binop_diff" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           "max_over_time(purchase[24h]) - on (user_id, event_type) min_over_time(purchase[24h])",
           "2024-01-15 12:00:00")
@@ -200,8 +194,7 @@ object PromQlQueries {
     // each adjacent sample pair explodes onto ≤ window/step = 2 grid
     // cells; no per-step loop, no range join.
     "q107_range_rate" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.evalRange(src, "rate(purchase[6h])",
           "2024-01-14 00:00:00", "2024-01-15 00:00:00", stepSec = 10800)
         .select(col("user_id"), col("event_type"), col("step_ts"),
@@ -213,8 +206,7 @@ object PromQlQueries {
     // aggregated with `without` — per step, the latest sample per series
     // within the (shifted) staleness lookback, summed across users.
     "q108_range_instant" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.evalRange(src,
           """sum without (user_id) ({event_type=~"click|view"} offset 1h)""",
           "2024-01-14 00:00:00", "2024-01-15 00:00:00", stepSec = 10800,
@@ -231,8 +223,7 @@ object PromQlQueries {
     // rows carry op='gt', bool rows op='gt_bool' (only the 1.0 hits, so
     // the two row sets coincide and the values differ).
     "q109_promql_cmp" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       val filt = PromQlParser.eval(src, """{event_type=~".+"} > 120""",
           "2024-01-15 12:00:00", lookback = "24 HOURS")
         .withColumn("op", lit("gt"))
@@ -251,8 +242,7 @@ object PromQlQueries {
     // users who do not (`unless` = left-anti) — together they partition
     // the click instant vector.
     "q110_promql_setops" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("op", lit(tag))
@@ -272,8 +262,7 @@ object PromQlQueries {
     // to round to 0, so the oracle's 0/0 → NaN branch is reachable only
     // when engine and oracle agree on it).
     "q111_promql_group_left" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           """{event_type=~".+"} / on (user_id) group_left sum by (user_id) ({event_type=~".+"})""",
           "2024-01-15 12:00:00", lookback = "24 HOURS")
@@ -288,8 +277,7 @@ object PromQlQueries {
     // through sqrt(var_pop); round 6 absorbs the engines' last-ulp moment
     // differences (the q62 precedent).
     "q113_promql_agg_ext" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("fn", lit(tag))
@@ -305,8 +293,7 @@ object PromQlQueries {
     // live one — the alerting primitive for dead series. Both faces in one
     // result, presence derived from the data on both engines.
     "q114_promql_absent" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -322,8 +309,7 @@ object PromQlQueries {
     // double-arithmetic expression (×/÷ by 0.5 and floor are exact), so
     // the twin is bit-identical.
     "q115_promql_fns" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           """label_join(clamp(round({event_type=~".+"}, 0.5), 10, 200), "series", "|", "user_id", "event_type")""",
           "2024-01-15 12:00:00", lookback = "24 HOURS")
@@ -336,8 +322,7 @@ object PromQlQueries {
     // trailing 12h window) — three faces of the same grouped-window shape,
     // tagged and unioned.
     "q116_promql_over_time_ext" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00")
           .withColumn("fn", lit(tag))
@@ -354,8 +339,7 @@ object PromQlQueries {
     // expression — the only cross-engine-deterministic way to oracle an
     // FP regression. predict_linear extrapolates 1h past T.
     "q117_promql_deriv" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00")
           .withColumn("fn", lit(tag))
@@ -371,8 +355,7 @@ object PromQlQueries {
     // "range/step + 1" rule (one generate-project through the SAME
     // GridCompiler as query_range), and the outer max folds per series.
     "q118_promql_subquery" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src, "max_over_time(rate(purchase[6h])[12h:3h])",
           "2024-01-15 12:00:00")
         .select(col("user_id"), col("event_type"),
@@ -387,8 +370,7 @@ object PromQlQueries {
     // code paths (end-instant shift vs pin). The oracle computes the
     // 06:00-anchored result once and emits both branch copies.
     "q162_subquery_offset" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00")
           .withColumn("which", lit(tag))
@@ -406,8 +388,7 @@ object PromQlQueries {
     // whose CLOSED trailing 6h window holds it — inner work scales with
     // fine-grid size, not outer-steps × substeps.
     "q119_range_subquery" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.evalRange(src, "max_over_time(rate(purchase[6h])[6h:3h])",
           "2024-01-14 00:00:00", "2024-01-15 00:00:00", stepSec = 21600)
         .select(col("user_id"), col("event_type"), col("step_ts"),
@@ -420,8 +401,7 @@ object PromQlQueries {
     // over a trailing 24h window — integer counts and one exact
     // subtraction, so the twin matches bit-for-bit.
     "q120_promql_counter_fns" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00")
           .withColumn("fn", lit(tag))
@@ -438,8 +418,7 @@ object PromQlQueries {
     // age-style expressions (`time() - last_seen`). Presence per step via
     // the 2h lookback; the value is exactly the step's epoch second.
     "q121_promql_time" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.evalRange(src, """{event_type=~"click|view"} * 0 + time()""",
           "2024-01-14 00:00:00", "2024-01-15 00:00:00", stepSec = 10800,
           lookbackSec = 7200)
@@ -453,8 +432,7 @@ object PromQlQueries {
     // timestamp() (newest in-lookback sample's epoch). Epoch arithmetic
     // on identical doubles, so the twin matches exactly.
     "q122_promql_age" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src, """time() - timestamp({event_type=~".+"})""",
           "2024-01-15 12:00:00", lookback = "24 HOURS")
         .select(col("user_id"), col("event_type"),
@@ -468,8 +446,7 @@ object PromQlQueries {
     // zeros trimmed) mirrored verbatim in the twin — default double
     // printing diverges between engines at 1e7 (Java goes scientific).
     "q123_promql_count_values" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src,
           """count_values by (event_type) ("v", {event_type=~".+"})""",
           "2024-01-15 12:00:00", lookback = "24 HOURS")
@@ -485,8 +462,7 @@ object PromQlQueries {
     // "scaled" divides a vector by scalar(count(...)) — the one-row
     // scalar frame broadcast-joins back, no driver-side collect.
     "q124_promql_sort_scalar_vector" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -511,8 +487,7 @@ object PromQlQueries {
     // vector-argument form: each sample's epoch value replaced by its
     // UTC component; engine Sunday=0 = DuckDB's dayofweek numbering).
     "q125_promql_time_components" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -530,8 +505,7 @@ object PromQlQueries {
     // query evaluates at 2024-01-16 00:00 but the pinned branches read
     // the 15th at 10:00 / 08:00; the plain-offset branch reads 12:00.
     "q126_promql_at_modifier" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-16 00:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -553,8 +527,7 @@ object PromQlQueries {
     // unusable for interdependent state). sf=0.5/tf=0.25: every constant
     // is an exact double, so both engines fold bit-identically.
     "q127_promql_holt_winters" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       PromQlParser.eval(src, """holt_winters({event_type="click"}[24h], 0.5, 0.25)""",
           "2024-01-15 12:00:00")
         .select(col("user_id"), col("event_type"),
@@ -568,8 +541,7 @@ object PromQlQueries {
     // probe shape keeps the plan lazy/distributed. Presence is derived
     // from the data on both engines (NOT EXISTS on the twin).
     "q128_promql_absent_over_time" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00")
           .withColumn("which", lit(tag))
@@ -591,8 +563,7 @@ object PromQlQueries {
     // deterministic rule is the one an oracle can verify; sort_by_label
     // is presentation-only (row set pinned by the twin).
     "q133_promql_limitk" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -609,8 +580,7 @@ object PromQlQueries {
     // exactly, and the twin recomputes the identical md5 fraction, so
     // the KEPT SET itself is oracle-checked, not just its size.
     "q140_promql_limit_ratio" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -628,8 +598,7 @@ object PromQlQueries {
     // AlertRulesSpec on synthetic series instead). Kept rows carry the
     // run's last sample value.
     "q138_alert_keep_firing" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       AlertRules.evalRule(src,
         AlertRules.Rule("KeepFire",
           """sum by (event_type) (count_over_time({event_type=~".+"}[2h])) > 0 and on() hour() >= 18""",
@@ -651,8 +620,7 @@ object PromQlQueries {
     // kept tails clip at min(prev+1+K, maxIdx, next−1) and carry the
     // run's last value — so the typed fold's every branch hashes green.
     "q257_alert_keep_bridging" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       AlertRules.evalRule(src,
         AlertRules.Rule("KeepBridge",
           """sum by (event_type) (count_over_time({event_type=~".+"}[1h])) > 0 and on() hour() % 5 < 3 and on() hour() < 22""",
@@ -669,8 +637,7 @@ object PromQlQueries {
     // the atan2 binary operator (total, well-conditioned; 6-dp rounding
     // absorbs last-ulp libm differences, the trig-battery rule).
     "q137_promql_arith_ops" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -688,8 +655,7 @@ object PromQlQueries {
     // recorded frame is a plan (grid eval + union), not a buffer, so the
     // whole composition stays one declarative plan.
     "q136_recording_rule" -> ((s, d) => {
-      val src0 = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src0 = eventsSrc(s, d)
       val rec = RecordingRules.materialize(src0, "hourly:clicks",
         """sum by (event_type) (count_over_time({event_type="click"}[1h]))""",
         "2024-01-15 00:00:00", "2024-01-15 23:00:00", stepSec = 3600)
@@ -711,8 +677,7 @@ object PromQlQueries {
     // The state machine is ONE window pass (gaps-and-islands); the twin
     // replays it with the same lag + ignore-nulls carry.
     "q135_alert_rules" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       AlertRules.evalRule(src,
         AlertRules.Rule("HighTraffic",
           """sum by (event_type) (count_over_time({event_type=~".+"}[2h])) > 0 and on() hour() >= 18""",
@@ -730,8 +695,7 @@ object PromQlQueries {
     // PromQlParserSpec — max→latest, min→earliest — and made explicit in
     // the twin's row_number ordering).
     "q134_promql_mad_tsof" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -751,8 +715,7 @@ object PromQlQueries {
     // and day_of_year over timestamp() — rounding at 6 dp absorbs any
     // last-ulp libm disagreement.
     "q132_promql_trig" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -784,8 +747,7 @@ object PromQlQueries {
     // land on the SAME instant (12:00) through different code paths, and
     // a range window shifted forward reads (00:00, 06:00].
     "q144_promql_neg_offset" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 00:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -806,8 +768,7 @@ object PromQlQueries {
     // bare-number/power form [2^2 * 900] = a 1h window — each lands on a
     // window no single-literal branch shares, so a fold bug flips rows.
     "q150_promql_duration_expr" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -824,8 +785,7 @@ object PromQlQueries {
     // column: a regex union, and negative equality+regex composed. The
     // quoted-name form {"click"} rides the same path (3.x UTF-8 names).
     "q148_promql_name_matcher" -> ((s, d) => {
-      val src = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src = eventsSrc(s, d)
       def run(q: String, tag: String) =
         PromQlParser.eval(src, q, "2024-01-15 12:00:00", lookback = "24 HOURS")
           .withColumn("which", lit(tag))
@@ -1007,8 +967,7 @@ object PromQlQueries {
     "q239_rule_group_concurrency" -> ((s, d) => {
       import s.implicits._
       import graft.metrics.RuleGroup
-      val src0 = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src0 = eventsSrc(s, d)
       val rules = Seq(
         RuleGroup.Rule("click:cnt1h",
           """sum by (event_type, user_id) (count_over_time({event_type="click"}[1h]))"""),
@@ -1057,8 +1016,7 @@ object PromQlQueries {
     // values; cycle 1 is empty, as upstream).
     "q253_rulegroup_cycles" -> ((s, d) => {
       import graft.metrics.RuleGroup
-      val src0 = PromQlParser.PromSource(events(s, d), "event_type",
-        Seq("user_id", "event_type"), "ts", "event_id", "value")
+      val src0 = eventsSrc(s, d)
       val rules = Seq(
         RuleGroup.Rule("purchase:lag", """{event_type="purchase:tot"}"""),
         RuleGroup.Rule("purchase:tot",
@@ -1643,7 +1601,9 @@ object PromQlQueries {
 
     // Grid semantics: an adjacent (prev, cur) sample pair contributes its
     // reset-aware inc to every step T with cur_ts <= T < prev_ts + 6h —
-    // both endpoints inside the trailing window, the instant-eval rule.
+    // both endpoints inside the trailing window. Unlike instant eval (which
+    // gives 0 from counterIncrease's first-sample baseline), a step whose
+    // window holds one sample gets no row.
     "q107_range_rate" ->
       """WITH steps AS (
         |  SELECT make_timestamp((1705190400 + i * 10800) * 1000000) AS step_ts

@@ -96,39 +96,21 @@ object StreamingQueries {
     // over the drained stream equals the batch read, so the oracle is the
     // same SQL as the batch q77.
     "s78_stream_prom_source" -> ((s, d) => {
-      // Same harness discipline as StreamOps.replayEvents (this is the
-      // one query that starts its stream directly): state partitions
-      // sized to the key space (3 series × 24 hourly groups — the bench
-      // session's 32 shuffle partitions mean 32 state-store delta files
-      // fsynced per trigger, pure overhead), and the checkpoint on
-      // RAM-backed /dev/shm instead of the default temp dir so the 4
-      // micro-batches' offset/commit/state fsyncs are free. Aggregation
-      // results are partition-count-invariant; output unchanged.
-      val shm = new java.io.File("/dev/shm")
-      val ckptBase = if (shm.isDirectory && shm.canWrite) shm
-                     else new java.io.File(sys.props("java.io.tmpdir"))
-      val ckpt = new java.io.File(ckptBase,
-        s"graft-ckpt-s78-${java.util.UUID.randomUUID().toString.take(8)}")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q =
-        try s.readStream.format("graft.sources.PromRangeSource")
+      // The one query that starts its stream directly, on the same replay
+      // plumbing as StreamOps.replayEvents (4 state partitions for 3
+      // series × 24 hourly groups, checkpoint on tmpfs). Aggregation
+      // results are partition-count-invariant.
+      StreamOps.runToMemory(s, "s78_sink",
+        s.readStream.format("graft.sources.PromRangeSource")
           .option("start", "1704067200").option("end", "1704153600")
           .option("stepSeconds", "60").option("series", "cpu,mem,disk")
           .option("batchSeconds", "21600")
           .load()
           .groupBy(col("series"), date_trunc("hour", col("ts")).as("hour"))
           .agg(count(lit(1)).as("n"),
-            round(sum(col("value").cast("decimal(18,1)")).cast("double"), 1).as("sum_value"))
-          .writeStream.outputMode(OutputMode.Complete)
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .format("memory").queryName("s78_sink").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.processAllAvailable() finally {
-        q.stop()
-        graft.stream.StreamOps.deleteRecursivelyPublic(ckpt)
-      }
-      s.table("s78_sink").orderBy(col("series"), col("hour"))
+            round(sum(col("value").cast("decimal(18,1)")).cast("double"), 1).as("sum_value")),
+        OutputMode.Complete)(_.processAllAvailable())
+        .orderBy(col("series"), col("hour"))
     }),
 
     // PromQL increase()/resets() as a stateful stream (O(1) state per

@@ -3,7 +3,7 @@ package graft.stream
 import graft.Tables
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Typed event row for streaming stages (≅ the reference's stream payload,
@@ -168,30 +168,7 @@ object StreamOps {
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
         .as[Ev].orderBy($"ts", $"event_id").collect())
     val stream = MemoryStream[Ev]
-    // Checkpoint on tmpfs when available: every micro-batch fsyncs offsets/
-    // commit/state-delta files, and for a seconds-long replay that metadata
-    // I/O dominates. RAM-backed /dev/shm makes those fsyncs free; a real
-    // deployment points this at a DFS dir instead (durability matters
-    // there, not here — the replay is rebuilt from scratch each run).
-    val shm = new java.io.File("/dev/shm")
-    val ckptBase = if (shm.isDirectory && shm.canWrite) shm
-                   else new java.io.File(sys.props("java.io.tmpdir"))
-    val ckpt = new java.io.File(ckptBase,
-      s"graft-ckpt-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-    // Size state partitions to the key space (≈150 series here): the state
-    // store commits one delta file per partition per micro-batch, so excess
-    // partitions are pure per-batch overhead. Fixed at query start; a real
-    // deployment sizes this to series cardinality / executor count.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try pipeline(stream.toDS())
-        .writeStream.outputMode(outputMode)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .format("memory").queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
+    runToMemory(spark, name, pipeline(stream.toDS()), outputMode) { q =>
       val per = math.max(1, math.ceil(rows.length.toDouble / chunks).toInt)
       rows.grouped(per).foreach { chunk =>
         stream.addData(chunk.toSeq)
@@ -220,11 +197,7 @@ object StreamOps {
           .map(et => base.copy(event_type = et)))
         q.processAllAvailable()
       }
-    } finally {
-      q.stop()
-      deleteRecursively(ckpt)
     }
-    spark.table(name)
   }
 
   /** Generic deterministic replay of pre-built STRING records (e.g. OTLP
@@ -239,6 +212,33 @@ object StreamOps {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[String]
+    runToMemory(spark, name, pipeline(stream.toDS()), outputMode) { q =>
+      val per = math.max(1, math.ceil(records.length.toDouble / chunks).toInt)
+      records.grouped(per).foreach { chunk =>
+        stream.addData(chunk.toSeq)
+        q.processAllAvailable()
+      }
+    }
+  }
+
+  /** The one replay loop's plumbing: starts `df` into the memory sink
+    * `name`, lets `drive` feed it, then stops the query, deletes its
+    * checkpoint and returns the committed sink table.
+    *
+    * The checkpoint goes on tmpfs when available: every micro-batch fsyncs
+    * offsets/commit/state-delta files, and for a seconds-long replay that
+    * metadata I/O dominates. RAM-backed /dev/shm makes those fsyncs free; a
+    * real deployment points this at a DFS dir instead (durability matters
+    * there, not here — the replay is rebuilt from scratch each run).
+    *
+    * State partitions are sized to the key space (≈150 series here): the
+    * state store commits one delta file per partition per micro-batch, so
+    * excess partitions are pure per-batch overhead. The count is fixed at
+    * query start, so the session's value is restored right after it; a
+    * real deployment sizes this to series cardinality / executor count. */
+  private[graft] def runToMemory(spark: SparkSession, name: String, df: => DataFrame,
+                                 outputMode: OutputMode)
+                                (drive: StreamingQuery => Unit): DataFrame = {
     val shm = new java.io.File("/dev/shm")
     val ckptBase = if (shm.isDirectory && shm.canWrite) shm
                    else new java.io.File(sys.props("java.io.tmpdir"))
@@ -247,28 +247,18 @@ object StreamOps {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     val q =
-      try pipeline(stream.toDS())
-        .writeStream.outputMode(outputMode)
+      try df.writeStream.outputMode(outputMode)
         .option("checkpointLocation", ckpt.getAbsolutePath)
         .format("memory").queryName(name)
         .start()
       finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      val per = math.max(1, math.ceil(records.length.toDouble / chunks).toInt)
-      records.grouped(per).foreach { chunk =>
-        stream.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-    } finally {
+    try drive(q)
+    finally {
       q.stop()
       deleteRecursively(ckpt)
     }
     spark.table(name)
   }
-
-  /** Checkpoint cleanup for queries that start their stream directly
-    * (s78's DSv2 source) — same semantics as the private helper. */
-  def deleteRecursivelyPublic(f: java.io.File): Unit = deleteRecursively(f)
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

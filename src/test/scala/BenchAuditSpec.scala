@@ -47,6 +47,25 @@ class BenchAuditSpec extends AnyFunSuite {
     assert(graft.Bench.loadVerdict(0.20, Some(0.0)) == "null") // degenerate base
   }
 
+  test("Bench.fitPrefix: the line's query map is a true slowest-first prefix") {
+    val entries = Seq("\"q_slow_with_a_long_name\":9.0", "\"q2\":5.0", "\"q3\":1.0")
+    // the long slow entry does not fit: nothing behind it may take its place
+    assert(graft.Bench.fitPrefix(entries, 29).isEmpty)
+    assert(graft.Bench.fitPrefix(entries, 30) == entries.take(1)) // 29 chars + comma
+    assert(graft.Bench.fitPrefix(entries, 39) == entries.take(2))
+    assert(graft.Bench.fitPrefix(entries, 38) == entries.take(1))
+    assert(graft.Bench.fitPrefix(entries, 1000) == entries)
+    assert(graft.Bench.fitPrefix(Nil, 10).isEmpty)
+  }
+
+  test("Bench.sfNumber: sf<number> suffix or None, never a made-up 0") {
+    assert(graft.Bench.sfNumber("/data/sf0.1") == Some("0.1"))
+    assert(graft.Bench.sfNumber("/data/sf10") == Some("10"))
+    assert(graft.Bench.sfNumber("/data/scale_slice").isEmpty)
+    assert(graft.Bench.sfNumber("/data/sf0.1/events").isEmpty)
+    assert(graft.Bench.sfNumber("/data/sf.").isEmpty) // not a number
+  }
+
   test("Bench.hazeBands: a contiguous elevated band self-indicts; " +
     "scattered singles and short runs do not") {
     def row(n: String, base: Double, now: Double) = (n, base, now)

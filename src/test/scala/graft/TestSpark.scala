@@ -5,15 +5,5 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (SURVEY §5 guide). */
 object TestSpark {
   val SF = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(8)
 }
