@@ -3,6 +3,7 @@ package graft.metrics
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, collect_list, element_at, expr, lit, max, max_by, min, row_number, sort_array, struct, to_timestamp}
+import scala.jdk.CollectionConverters._
 
 /** A8 + P14: the engine's HTTP face — Prometheus text-format exposition
   * plus the Prometheus HTTP query API.
@@ -178,25 +179,30 @@ final class MetricsServer(observed: Observed, port: Int = 0,
     """{"status":"success","data":{"activeAlertmanagers":[],"droppedAlertmanagers":[]}}""" })
   server.createContext("/api/v1/notifications", MetricsServer.jsonHandler { _ =>
     """{"status":"success","data":[]}""" })
-  // TSDB admin API state (upstream: --web.enable-admin-api). Tombstones
-  // recorded by delete_series MASK every serving read below (the `src`
-  // def re-derives the masked view per request); clean_tombstones folds
-  // them permanently into the bound plan and clears the list. Plan-level
-  // masking is the serving-face analogue of the physical rewrite
-  // (Tombstones.clean), which q199 proves equivalent on the block store.
-  @volatile private var tombstonesList: Seq[Tombstones.Tombstone] = Nil
-  @volatile private var cleanedDf: Option[org.apache.spark.sql.DataFrame] = None
-  @volatile private var ingestedDf: Option[org.apache.spark.sql.DataFrame] = None
+  // TSDB admin API and ingest state (upstream: --web.enable-admin-api),
+  // held as ONE immutable snapshot and swapped whole under this server's
+  // lock, so the handler threads never see half an update: a reader
+  // takes `state` once. Tombstones recorded by delete_series MASK every
+  // serving read; clean_tombstones folds them permanently into the
+  // stored plan and clears the list. Plan-level masking is the
+  // serving-face analogue of the physical rewrite (Tombstones.clean),
+  // which q199 proves equivalent on the block store.
+  @volatile private var state = MetricsServer.Serving(None, Vector.empty, None, Nil)
+
+  /** The served source: the bound frame (or its cleaned fold) plus the
+    * ingested rows, tombstone-masked, all from one snapshot. */
+  private[metrics] def served: Option[PromQlParser.PromSource] =
+    promSource.map { boundSrc =>
+      val s = state
+      val stored = s.stored.getOrElse(boundSrc.df)
+      val df = s.ingested.fold(stored)(stored.unionByName(_))
+      boundSrc.copy(df =
+        if (s.tombstones.isEmpty) df
+        else Tombstones.mask(df, s.tombstones, boundSrc.tsCol))
+    }
 
   promSource.foreach { boundSrc =>
-    def src: PromQlParser.PromSource = {
-      val stored = cleanedDf.getOrElse(boundSrc.df)
-      val withIngest = ingestedDf.map(stored.unionByName(_)).getOrElse(stored)
-      val base = boundSrc.copy(df = withIngest)
-      if (tombstonesList.isEmpty) base
-      else base.copy(df =
-        Tombstones.mask(base.df, tombstonesList, boundSrc.tsCol))
-    }
+    def src: PromQlParser.PromSource = served.get
     // Shape parsed wire samples (metric/ts/value + a label map) onto the
     // bound source's schema — the same projection RecordingRules uses.
     def shapeIngest(parsed: org.apache.spark.sql.DataFrame,
@@ -212,16 +218,27 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         case c => element_at(col(labelsCol), c).cast(typed(c)).as(c)
       }: _*)
     }
-    def appendIngest(shaped: org.apache.spark.sql.DataFrame): Unit =
-      synchronized {
-        ingestedDf = Some(ingestedDf.map(_.unionByName(shaped)).getOrElse(shaped))
+    // Decode once, on write: the body's shaped rows are collected here,
+    // so a body that fails to decode fails its own POST (400), and the
+    // served ingest is ONE local relation of every accepted row — a read
+    // never re-runs an earlier body's decode, and the plan keeps one
+    // ingest leaf however many writes arrived.
+    val ingestSchema = org.apache.spark.sql.types.StructType(
+      boundSrc.df.schema.map(_.copy(nullable = true)))
+    def appendIngest(shaped: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = shaped.collect()
+      if (rows.nonEmpty) synchronized {
+        val all = state.rows ++ rows
+        state = state.copy(rows = all, ingested = Some(boundSrc.df.sparkSession
+          .createDataFrame(all.asJava, ingestSchema)))
       }
+    }
     // Remote-write RECEIVER (POST /api/v1/write): the REAL wire — a
     // stock Prometheus POSTs `Content-Encoding: snappy` over protobuf
     // (v1 `prometheus.WriteRequest`, or v2 `io.prometheus.write.v2
     // .Request` selected by the Content-Type proto= parameter) — plus
     // the JSON mapping for hand-written bodies. All three wires land in
-    // the same shapeIngest → immediately queryable union.
+    // the same shapeIngest → appendIngest, queryable at once.
     server.createContext("/api/v1/write", MetricsServer.rawBodyHandler {
       (enc, ctype, raw) =>
         import boundSrc.df.sparkSession.implicits._
@@ -393,16 +410,17 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         val maxt = params.get("end").map(t =>
           MetricsServer.epochSec(MetricsServer.parseTime(t)) * 1000L)
           .getOrElse(Long.MaxValue)
-        tombstonesList = tombstonesList :+ Tombstones.Tombstone(
+        val t = Tombstones.Tombstone(
           PromQlParser.selectorMatchers(boundSrc, sel), mint, maxt)
+        synchronized { state = state.copy(tombstones = state.tombstones :+ t) }
         """{"status":"success","data":null}"""
       })
     server.createContext("/api/v1/admin/tsdb/clean_tombstones",
       MetricsServer.jsonHandler { _ =>
-        if (tombstonesList.nonEmpty) {
-          cleanedDf = Some(src.df) // folds masked ingest in too…
-          tombstonesList = Nil
-          ingestedDf = None // …so drop it or it would union twice
+        // the fold takes the masked ingest in too, so the rows go with it
+        synchronized {
+          if (state.tombstones.nonEmpty)
+            state = MetricsServer.Serving(Some(src.df), Vector.empty, None, Nil)
         }
         """{"status":"success","data":null}"""
       })
@@ -661,6 +679,15 @@ final class MetricsServer(observed: Observed, port: Int = 0,
 
 object MetricsServer {
 
+  /** One snapshot of a server's serving state: the cleaned fold of the
+    * bound frame (None = the bound frame itself), every accepted ingest
+    * row and their one local relation, and the pending tombstones. */
+  private final case class Serving(
+      stored: Option[org.apache.spark.sql.DataFrame],
+      rows: Vector[Row],
+      ingested: Option[org.apache.spark.sql.DataFrame],
+      tombstones: Seq[Tombstones.Tombstone])
+
   /** An over-limit query result (→ HTTP 422, Prometheus's execution-error
     * class): the server refuses to materialize it rather than buffering an
     * unbounded series set on the driver. */
@@ -871,7 +898,7 @@ object MetricsServer {
         (name, (own ++ ext).sortBy(_._1),
           r.getAs[Double]("__fv"), r.getAs[java.sql.Timestamp]("__fts").getTime)
       }
-      .sortBy { case (name, labels, _, _) => (name, labels.mkString(" ")) }
+      .sortBy { case (name, labels, _, _) => (name, labels.mkString("\u0000")) }
       .foldLeft(Option.empty[String]) { case (prev, (name, labels, v, tsMs)) =>
         val legacy = legacyName.pattern.matcher(name).matches()
         if (!prev.contains(name) && legacy)
@@ -1010,7 +1037,7 @@ object MetricsServer {
                                      metricCol: String): String = {
     def esc(s: String) = jsonEscape(s)
     val series = rows.groupBy(r => labelCols.map(c => String.valueOf(r.getAs[Any](c))))
-      .toSeq.sortBy(_._1.mkString(" "))
+      .toSeq.sortBy(_._1.mkString("\u0000"))
     val items = series.map { case (_, rs) =>
       val head = rs.head
       val sl = labelCols.map { c =>

@@ -779,6 +779,16 @@ class MetricsSpec extends AnyFunSuite {
         val (cq2, bq2) = get(srv.boundPort, "/api/v1/query?query=" +
           enc("sum(cpu)") + "&time=2024-01-01T10:02:00Z")
         assert(cq2 == 200 && bq2.contains("\"12.0\""), bq2)
+        // valid snappy around a truncated WriteRequest: the decode fails
+        // on the write itself (400), and nothing of it is served after
+        val (cp, bp) = postBytes(srv.boundPort,
+          Snappy.compress(pb1.dropRight(3)), Seq(
+            "Content-Encoding" -> "snappy",
+            "Content-Type" -> "application/x-protobuf"))
+        assert(cp == 400 && bp.contains("protobuf"), bp)
+        val (cq3, bq3) = get(srv.boundPort, "/api/v1/query?query=" +
+          enc("sum(cpu)") + "&time=2024-01-01T10:02:00Z")
+        assert(cq3 == 200 && bq3.contains("\"12.0\""), bq3)
         // REMOTE-READ over the real wire: snappy(ReadRequest pb) in,
         // snappy(ReadResponse pb) out — both ingested-and-stored samples
         // visible, matcher enum decoded, labels/samples byte-real.
@@ -924,6 +934,96 @@ class MetricsSpec extends AnyFunSuite {
         intercept[IllegalArgumentException] {
           ProtoWire.unframeMessages(corrupted)
         }
+      } finally srv.close()
+    }
+  }
+
+  /** HTTP helpers for the serving-state cases below. */
+  private def call(port: Int, pathAndQuery: String,
+                   body: Option[String] = None): (Int, String) = {
+    val url = new java.net.URI(s"http://127.0.0.1:$port$pathAndQuery").toURL
+    val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    body.foreach { b =>
+      conn.setRequestMethod("POST"); conn.setDoOutput(true)
+      val os = conn.getOutputStream
+      try os.write(b.getBytes("UTF-8")) finally os.close()
+    }
+    val code = conn.getResponseCode
+    val in = if (code == 200) conn.getInputStream else conn.getErrorStream
+    (code, scala.io.Source.fromInputStream(in).mkString)
+  }
+  private def writeBody(metric: String, user: Long, value: Double): String =
+    s"""{"timeseries":[{"labels":[{"name":"__name__","value":"$metric"},""" +
+      s"""{"name":"user_id","value":"$user"}],""" +
+      s""""samples":[{"value":$value,"timestamp":1704103260000}]}]}"""
+  private def cpuSource = {
+    val df = Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "cpu", 7.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    PromQlParser.PromSource(df, "event_type",
+      Seq("user_id", "event_type"), "ts", "event_id", "value")
+  }
+
+  test("serving state: concurrent writes, deletes and cleans lose and double nothing") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def query(port: Int, q: String): String = {
+      val (c, b) = call(port, "/api/v1/query?query=" + enc(q) +
+        "&time=2024-01-01T10:02:00Z")
+      assert(c == 200, b)
+      b
+    }
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(cpuSource))
+      try {
+        val port = srv.boundPort
+        val codes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+        // three writers, each its own distinct `w` series; one admin
+        // thread writing a `gone` series, deleting it, then cleaning
+        val writers = (1 to 3).map { t =>
+          new Thread(() => (0 until 8).foreach { i =>
+            val u = t * 100L + i
+            codes.add(call(port, "/api/v1/write", Some(writeBody("w", u, u + 0.5))))
+          })
+        }
+        val admin = new Thread(() => (0 until 6).foreach { k =>
+          codes.add(call(port, "/api/v1/write", Some(writeBody("gone", k, 1.0))))
+          codes.add(call(port, "/api/v1/admin/tsdb/delete_series?match[]=" +
+            enc(s"""gone{user_id="$k"}""")))
+          codes.add(call(port, "/api/v1/admin/tsdb/clean_tombstones"))
+        })
+        val all = writers :+ admin
+        all.foreach(_.start()); all.foreach(_.join())
+        assert(codes.size == 24 + 18)
+        codes.forEach { case (c, b) => assert(c == 200, b) }
+        // every written series once, with its value: a lost write is
+        // missing, a doubled one sums to twice its value
+        val item = """\{"metric":\{([^}]*)\},"value":\[[^,]+,"([^"]+)"\]\}""".r
+        val user = """"user_id":"(\d+)"""".r
+        val got = item.findAllMatchIn(query(port, "sum_over_time(w[5m])")).map { m =>
+          user.findFirstMatchIn(m.group(1)).get.group(1).toLong -> m.group(2).toDouble
+        }.toList
+        val want = for (t <- 1 to 3; i <- 0 until 8) yield (t * 100L + i) -> (t * 100L + i + 0.5)
+        assert(got.sorted == want.toList.sorted)
+        assert(query(port, "sum_over_time(cpu[5m])").contains("\"7.0\""))
+        assert(query(port, "count_over_time(gone[5m])").contains("\"result\":[]"))
+      } finally srv.close()
+    }
+  }
+
+  test("decode on write: the served plan keeps one ingest leaf however many writes arrived") {
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(cpuSource))
+      try {
+        def write(u: Long): Unit = {
+          val (c, b) = call(srv.boundPort, "/api/v1/write", Some(writeBody("w", u, 1.0)))
+          assert(c == 200, b)
+        }
+        def leaves = srv.served.get.df.queryExecution.analyzed.collectLeaves().size
+        write(0)
+        val afterOne = leaves
+        (1 until 20).foreach(u => write(u.toLong))
+        assert(leaves == afterOne)
+        assert(srv.served.get.df.count() == 1 + 20)
       } finally srv.close()
     }
   }
