@@ -2,6 +2,8 @@ package graft.metrics
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions.{col, collect_list, element_at, expr, lit, max, max_by, min, row_number, sort_array, struct, to_timestamp}
 import scala.jdk.CollectionConverters._
 
@@ -45,7 +47,16 @@ import scala.jdk.CollectionConverters._
   * driver memory (the only unbounded driver collect the round-7 audit
   * found in the tree).
   *
-  * JDK built-in `HttpServer`, zero dependencies, one daemon executor;
+  * Every query is served in the bound frame's own partition count, read
+  * once when the server is built: a one-partition source (one small
+  * parquet file) stays one partition after the ingest union and the
+  * tombstone mask, so a served query plans no exchange and runs as one
+  * Spark job; a larger source keeps its partitions and its parallelism.
+  * A bound frame whose own plan has an exchange runs that shuffle once,
+  * at construction, to learn the count.
+  *
+  * JDK built-in `HttpServer`, zero dependencies, a pool of 4 daemon
+  * handler threads sharing the one Spark session;
   * `port = 0` binds an ephemeral port (read it back via [[boundPort]]).
   * Loopback-only by design: production scrapes go through the pod network
   * namespace exactly like the reference's sidecar-scraped endpoint.
@@ -189,16 +200,25 @@ final class MetricsServer(observed: Observed, port: Int = 0,
   // which q199 proves equivalent on the block store.
   @volatile private var state = MetricsServer.Serving(None, Vector.empty, None, Nil)
 
+  // The bound frame's own partition count, read once. Serving in that
+  // many partitions keeps a one-partition source one partition after the
+  // ingest union: Spark then reports SinglePartition, which satisfies
+  // every distribution a window, aggregation, join or sort asks for, so
+  // no exchange is planned and a query runs as one job.
+  private val boundPartitions = promSource.map(_.df.rdd.getNumPartitions)
+
   /** The served source: the bound frame (or its cleaned fold) plus the
-    * ingested rows, tombstone-masked, all from one snapshot. */
+    * ingested rows, tombstone-masked, all from one snapshot, in the bound
+    * frame's partition count. */
   private[metrics] def served: Option[PromQlParser.PromSource] =
     promSource.map { boundSrc =>
       val s = state
       val stored = s.stored.getOrElse(boundSrc.df)
       val df = s.ingested.fold(stored)(stored.unionByName(_))
-      boundSrc.copy(df =
+      val masked =
         if (s.tombstones.isEmpty) df
-        else Tombstones.mask(df, s.tombstones, boundSrc.tsCol))
+        else Tombstones.mask(df, s.tombstones, boundSrc.tsCol)
+      boundSrc.copy(df = masked.coalesce(boundPartitions.get))
     }
 
   promSource.foreach { boundSrc =>
@@ -702,25 +722,25 @@ object MetricsServer {
                                      params: Map[String, String]): Seq[A] =
     params.get("limit").map(_.toInt).filter(_ > 0).map(xs.take).getOrElse(xs)
 
+  /** A physical plan's children, AQE-unwrapped: the adaptive node and
+    * its query stages hide the real operators as inner plans, not
+    * children. */
+  private[metrics] def planKids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec        => Seq(q.plan)
+    case other                    => other.children
+  }
+
   /** The `stats=all` payload from an EXECUTED plan's own SQLMetrics —
     * totalQueryableSamples = rows leaving the scans, peakSamples = the
-    * widest operator; AQE-unwrapped (the adaptive node and its stages
-    * hide the real operators as inner plans, not children). */
-  private[metrics] def statsJson(
-      plan: org.apache.spark.sql.execution.SparkPlan, evalSec: Double): String = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
+    * widest operator. */
+  private[metrics] def statsJson(plan: SparkPlan, evalSec: Double): String = {
     def outRows(p: SparkPlan): Seq[Long] =
       p.metrics.get("numOutputRows").map(_.value).toSeq ++
-        kids(p).flatMap(outRows) ++ p.subqueries.flatMap(outRows)
+        planKids(p).flatMap(outRows) ++ p.subqueries.flatMap(outRows)
     def scanRows(p: SparkPlan): Seq[Long] =
-      if (kids(p).isEmpty) p.metrics.get("numOutputRows").map(_.value).toSeq
-      else kids(p).flatMap(scanRows) ++ p.subqueries.flatMap(scanRows)
+      if (planKids(p).isEmpty) p.metrics.get("numOutputRows").map(_.value).toSeq
+      else planKids(p).flatMap(scanRows) ++ p.subqueries.flatMap(scanRows)
     s""","stats":{"timings":{"evalTotalTime":$evalSec},""" +
       s""""samples":{"totalQueryableSamples":${scanRows(plan).sum},""" +
       s""""peakSamples":${(outRows(plan) :+ 0L).max}}}"""
@@ -796,17 +816,26 @@ object MetricsServer {
 
   // ---------- Prometheus HTTP API v1 plumbing ----------
 
-  /** Accepts epoch seconds, RFC3339 (`2024-01-15T12:00:00Z`), or the
-    * engine's plain `yyyy-MM-dd HH:mm:ss`; returns the plain form the
-    * compilers consume (session timezone is UTC). */
+  private val UnixTime = """-?[0-9]+(\.[0-9]*)?""".r
+  private val Rfc3339 = """.+T.+(Z|[+-][0-9]{2}:[0-9]{2})""".r
+
+  /** Accepts Prometheus's `<rfc3339 | unix_timestamp>` — unix seconds,
+    * fractional too (`1704067200.5`), and RFC3339 with `Z` or a numeric
+    * offset (`2024-01-01T02:00:00+02:00`) — or the engine's plain
+    * `yyyy-MM-dd HH:mm:ss`; returns the plain UTC form the compilers
+    * consume (session timezone is UTC). Sub-second parts floor to the
+    * second: the grid is second-grained. */
   private[metrics] def parseTime(s: String): String = {
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-    if (s.forall(_.isDigit))
-      java.time.LocalDateTime.ofEpochSecond(s.toLong, 0, java.time.ZoneOffset.UTC)
-        .format(fmt)
-    else if (s.endsWith("Z"))
-      java.time.LocalDateTime.parse(s.dropRight(1)).format(fmt)
-    else s
+    val utc = java.time.ZoneOffset.UTC
+    s match {
+      case UnixTime(_) =>
+        val sec = BigDecimal(s).setScale(0, BigDecimal.RoundingMode.FLOOR).toLongExact
+        java.time.LocalDateTime.ofEpochSecond(sec, 0, utc).format(fmt)
+      case Rfc3339(_) =>
+        java.time.OffsetDateTime.parse(s).atZoneSameInstant(utc).format(fmt)
+      case _ => s
+    }
   }
 
   /** Prometheus step syntax: bare (fractional) seconds or a compound

@@ -1027,4 +1027,87 @@ class MetricsSpec extends AnyFunSuite {
       } finally srv.close()
     }
   }
+
+  /** Every physical operator of an executed plan, AQE stages unwrapped. */
+  private def operators(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p +: (MetricsServer.planKids(p) ++ p.subqueries).flatMap(operators)
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect()
+    operators(df.queryExecution.executedPlan).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+  }
+  /** A small `x{a=…}` counter frame, read back from one parquet file. */
+  private def xFrame: org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_served").resolve("x").toString
+    (for (a <- Seq("p", "q", "r"); m <- 0 until 10) yield
+      (a.hashCode.toLong * 100 + m, java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00"),
+        a, "x", (m * (a.head - 'o')).toDouble))
+      .toDF("event_id", "ts", "a", "name", "value")
+      .coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+  private def xSource(df: org.apache.spark.sql.DataFrame) =
+    PromQlParser.PromSource(df, "name", Seq("a", "name"), "ts", "event_id", "value")
+
+  test("one-partition source: served queries plan no shuffle, before and after ingest") {
+    val t = "2024-01-01 10:09:00"
+    def plans(src: PromQlParser.PromSource) = Seq(
+      PromQlParser.eval(src, "rate(x[5m])", t),
+      PromQlParser.eval(src, "sum by (a) (rate(x[5m]))", t),
+      PromQlParser.eval(src, "topk(2, x)", t),
+      PromQlParser.evalRange(src, "sum by (a) (rate(x[5m]))", "2024-01-01 10:05:00", t, 60))
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(xSource(xFrame)))
+      try {
+        assert(srv.served.get.df.rdd.getNumPartitions == 1)
+        plans(srv.served.get).foreach(df => assert(shuffles(df) == 0, df.queryExecution.executedPlan))
+        // one write and one delete: the served frame is union + mask
+        val (wc, wb) = call(srv.boundPort, "/api/v1/write", Some(
+          """{"timeseries":[{"labels":[{"name":"__name__","value":"x"},""" +
+            """{"name":"a","value":"s"}],"samples":[{"value":4,"timestamp":1704103500000}]}]}"""))
+        assert(wc == 200, wb)
+        val (dc, db) = call(srv.boundPort, "/api/v1/admin/tsdb/delete_series?match[]=" +
+          java.net.URLEncoder.encode("""x{a="r"}""", "UTF-8"))
+        assert(dc == 200, db)
+        val src = srv.served.get
+        assert(src.df.rdd.getNumPartitions == 1)
+        plans(src).foreach(df => assert(shuffles(df) == 0, df.queryExecution.executedPlan))
+        val series = PromQlParser.eval(src, "x", t).collect().map(_.getAs[String]("a")).sorted
+        assert(series.toSeq == Seq("p", "q", "s"))
+      } finally srv.close()
+    }
+  }
+
+  test("many-partition source: served queries keep its partitions and their exchanges") {
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(xSource(xFrame.repartition(3))))
+      try {
+        val src = srv.served.get
+        assert(src.df.rdd.getNumPartitions == 3)
+        assert(shuffles(PromQlParser.eval(src, "sum by (a) (rate(x[5m]))",
+          "2024-01-01 10:09:00")) > 0)
+      } finally srv.close()
+    }
+  }
+
+  test("parseTime: fractional unix seconds floor; RFC3339 offsets convert to UTC") {
+    def sec(s: String) = MetricsServer.epochSec(MetricsServer.parseTime(s))
+    assert(sec("1704067200") == 1704067200L)
+    assert(sec("1704067200.5") == 1704067200L)
+    assert(sec("1704067200.000") == 1704067200L)
+    assert(sec("2024-01-01T00:00:00Z") == 1704067200L)
+    assert(sec("2024-01-01T00:00:00.250Z") == 1704067200L)
+    assert(sec("2024-01-01T02:00:00+02:00") == 1704067200L)
+    assert(sec("2023-12-31T19:30:00.999-04:30") == 1704067200L)
+    assert(sec("2024-01-01 00:00:00") == 1704067200L)
+    // both forms serve over HTTP, at the same instant as the Z form
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(cpuSource))
+      try Seq("1704103320.5", "2024-01-01T12:02:00%2B02:00").foreach { tm =>
+        val (c, b) = call(srv.boundPort, s"/api/v1/query?query=cpu&time=$tm")
+        assert(c == 200, b)
+        assert(b.contains(""""value":[1704103320,"7.0"]"""), b)
+      } finally srv.close()
+    }
+  }
 }
