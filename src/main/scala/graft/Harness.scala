@@ -71,13 +71,5 @@ object Harness {
   /** A JSON string literal: escapes backslash, quote and every control
     * char (< 0x20), so an error message or hand-written SQL with a tab
     * or CR cannot break a consumer's JSON parse. */
-  def json(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  def json(s: String): String = "\"" + graft.metrics.MetricsServer.jsonEscape(s) + "\""
 }

@@ -55,6 +55,15 @@ import scala.jdk.CollectionConverters._
   * A bound frame whose own plan has an exchange runs that shuffle once,
   * at construction, to learn the count.
   *
+  * Every endpoint is a function from one [[MetricsServer.Request]] (path,
+  * method, headers, the body read once, the multi-valued URL-plus-form
+  * parameters) to one [[MetricsServer.Reply]] (status, Content-Type,
+  * optional Content-Encoding, body), and one handler serves them all: it
+  * parses the request, maps an error — [[MetricsServer.ResultTooLarge]] →
+  * 422 `too_many_results`, anything else → 400 `bad_data`, in the JSON
+  * error envelope (`/federate`: as plain text) — and is the one place a
+  * reply is written.
+  *
   * JDK built-in `HttpServer`, zero dependencies, a pool of 4 daemon
   * handler threads sharing the one Spark session;
   * `port = 0` binds an ephemeral port (read it back via [[boundPort]]).
@@ -70,43 +79,43 @@ final class MetricsServer(observed: Observed, port: Int = 0,
                           metadata: Seq[PromMetricList] = Nil,
                           targets: Option[org.apache.spark.sql.DataFrame] = None)
     extends AutoCloseable {
+  import MetricsServer.{Reply, Request}
 
   private val startedAtMs: Long = System.currentTimeMillis()
 
   private val server =
     HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
-  server.createContext("/metrics", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val body = MetricsServer.render(observed.snapshot).getBytes("UTF-8")
-      ex.getResponseHeaders.set("Content-Type",
-        "text/plain; version=0.0.4; charset=utf-8")
-      ex.sendResponseHeaders(200, body.length.toLong)
-      val os = ex.getResponseBody
-      try os.write(body) finally os.close()
-    }
-  })
+  /** Binds `f` to `context` through the one request path,
+    * [[MetricsServer.handler]]; `errorReply` bodies its mapped errors. */
+  private def route(context: String,
+                    errorReply: (Int, String, String) => Reply = MetricsServer.jsonError)(
+      f: Request => Reply): Unit =
+    server.createContext(context, MetricsServer.handler(f, errorReply)): Unit
+  /** [[route]] for a JSON endpoint: `f` renders the 200 body. */
+  private def json(context: String)(f: Request => String): Unit =
+    route(context)(req => Reply.json(f(req)))
+
+  route("/metrics") { _ =>
+    Reply(200, MetricsServer.Exposition, MetricsServer.render(observed.snapshot))
+  }
   // Prettifier endpoint (stable upstream since 2.46): parse + canonical
   // re-print. Pure parsing — needs no source, and a syntax error surfaces
   // as the handler's standard {"status":"error"} envelope.
-  server.createContext("/api/v1/format_query", MetricsServer.jsonHandler { params =>
-    val query = params.getOrElse("query",
-      throw new IllegalArgumentException("missing 'query' parameter"))
-    s"""{"status":"success","data":"${MetricsServer.jsonEscape(PromQlFormat.format(query))}"}"""
-  })
+  json("/api/v1/format_query") { req =>
+    s"""{"status":"success","data":"${MetricsServer.jsonEscape(PromQlFormat.format(req.need("query")))}"}"""
+  }
   // AST endpoint (3.x experimental, --enable-feature=promql-experimental-
   // functions era): the parsed tree in the upstream translateAST JSON
   // shape. Pure parsing, no source needed.
-  server.createContext("/api/v1/parse_query", MetricsServer.jsonHandler { params =>
-    val query = params.getOrElse("query",
-      throw new IllegalArgumentException("missing 'query' parameter"))
-    s"""{"status":"success","data":${PromQlJson.json(query)}}"""
-  })
+  json("/api/v1/parse_query") { req =>
+    s"""{"status":"success","data":${PromQlJson.json(req.need("query"))}}"""
+  }
   // Metric metadata (upstream api/v1/metadata): HELP/TYPE per metric from
   // the configured metric lists; `metric` filters to one name, `limit`
   // caps the number of metrics (upstream semantics: limit counts METRICS).
-  server.createContext("/api/v1/metadata", MetricsServer.jsonHandler { params =>
-    val wanted = params.get("metric")
-    val limit = params.get("limit").map(_.toInt).getOrElse(Int.MaxValue)
+  json("/api/v1/metadata") { req =>
+    val wanted = req.get("metric")
+    val limit = req.get("limit").map(_.toInt).getOrElse(Int.MaxValue)
     val entries = metadata
       .flatMap(l => l.metrics.map(m => (m.name, l.kind.toLowerCase, m.description)))
       .filter(e => wanted.forall(_ == e._1))
@@ -118,57 +127,51 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         s""""${MetricsServer.jsonEscape(name)}":$items"""
       }
     s"""{"status":"success","data":{${entries.mkString(",")}}}"""
-  })
+  }
   // Lifecycle + status faces (upstream web/api): health/readiness probes
   // and the buildinfo/flags status endpoints k8s and dashboards poll.
-  server.createContext("/-/healthy", MetricsServer.jsonHandler { _ =>
-    """{"status":"success","data":"Healthy"}""" })
-  server.createContext("/-/ready", MetricsServer.jsonHandler { _ =>
-    """{"status":"success","data":"Ready"}""" })
-  server.createContext("/api/v1/status/buildinfo", MetricsServer.jsonHandler { _ =>
+  json("/-/healthy") { _ => """{"status":"success","data":"Healthy"}""" }
+  json("/-/ready") { _ => """{"status":"success","data":"Ready"}""" }
+  json("/api/v1/status/buildinfo") { _ =>
     s"""{"status":"success","data":{"version":"graft-0.11","revision":"spark",""" +
-      s""""features":{"promql-experimental-functions":"true"}}}""" })
-  server.createContext("/api/v1/status/flags", MetricsServer.jsonHandler { _ =>
+      s""""features":{"promql-experimental-functions":"true"}}}""" }
+  json("/api/v1/status/flags") { _ =>
     s"""{"status":"success","data":{"query.max-result-rows":"$maxResultRows",""" +
-      s""""web.enable-admin-api":"true","storage.tsdb.retention.time":"0s"}}""" })
-  server.createContext("/api/v1/status/runtimeinfo", MetricsServer.jsonHandler { _ =>
+      s""""web.enable-admin-api":"true","storage.tsdb.retention.time":"0s"}}""" }
+  json("/api/v1/status/runtimeinfo") { _ =>
     val rt = Runtime.getRuntime
     s"""{"status":"success","data":{"startTime":"${MetricsServer.iso(startedAtMs)}",""" +
       s""""CWD":"${MetricsServer.jsonEscape(sys.props("user.dir"))}",""" +
       s""""reloadConfigSuccess":true,"goroutineCount":${rt.availableProcessors()},""" +
-      s""""storageRetention":"0s"}}""" })
+      s""""storageRetention":"0s"}}""" }
   // The engine serves from parquet, not a WAL — replay is always
   // complete by the time the server answers (the q206 replay path runs
   // at load, not serve). Upstream shape: min/max/current/state.
-  server.createContext("/api/v1/status/walreplay", MetricsServer.jsonHandler { _ =>
-    """{"status":"success","data":{"min":0,"max":0,"current":0,"state":"done"}}""" })
+  json("/api/v1/status/walreplay") { _ =>
+    """{"status":"success","data":{"min":0,"max":0,"current":0,"state":"done"}}""" }
   // status/config serves the server's ACTUAL effective configuration
   // rendered as YAML (the upstream shape: {"yaml": "..."}) — external
   // labels, rule count, and the result cap are what this server truly
   // runs with; there is no config file to echo.
-  server.createContext("/api/v1/status/config", MetricsServer.jsonHandler { _ =>
+  json("/api/v1/status/config") { _ =>
     val ext = externalLabels.map { case (k, v) => s"    $k: $v" }.mkString("\n")
     val yaml = "global:\n  external_labels:\n" +
       (if (ext.nonEmpty) ext + "\n" else "") +
       s"query:\n  max_result_rows: $maxResultRows\n" +
       s"rule_files_inline: ${rules.size}\n"
-    s"""{"status":"success","data":{"yaml":"${MetricsServer.jsonEscape(yaml)}"}}""" })
+    s"""{"status":"success","data":{"yaml":"${MetricsServer.jsonEscape(yaml)}"}}""" }
   // No scrape manager / alertmanager discovery in this engine — the
   // upstream endpoints exist and serve their empty-but-well-formed
   // shapes (exactly what a Prometheus with no scrape_configs returns).
   // targets: data-bearing when a targets frame is bound (columns `job`,
   // `instance`, `health`, `last_scrape` — the q205 scrape-state shape);
   // otherwise the empty-but-well-formed no-scrape-config shape.
-  server.createContext("/api/v1/targets", MetricsServer.jsonHandler { params =>
+  json("/api/v1/targets") { req =>
     targets match {
       case None =>
         """{"status":"success","data":{"activeTargets":[],"droppedTargets":[]}}"""
       case Some(tf) =>
-        val stateFilter = params.get("state")
-        val rows = tf.limit(maxResultRows + 1).collect()
-        if (rows.length > maxResultRows)
-          throw new MetricsServer.ResultTooLarge(maxResultRows)
-        val items = rows.toSeq.map { r =>
+        val items = MetricsServer.collectCapped(tf, maxResultRows).rows.toSeq.map { r =>
           val job = String.valueOf(r.getAs[Any]("job"))
           val inst = String.valueOf(r.getAs[Any]("instance"))
           val health = String.valueOf(r.getAs[Any]("health"))
@@ -182,14 +185,13 @@ final class MetricsServer(observed: Observed, port: Int = 0,
             s""""lastScrape":"$lastScrape"}"""
         }
         // upstream ?state=active|dropped|any: this engine drops nothing
-        val active = if (stateFilter.contains("dropped")) Nil else items
+        val active = if (req.get("state").contains("dropped")) Nil else items
         s"""{"status":"success","data":{"activeTargets":[${active.mkString(",")}],""" +
           s""""droppedTargets":[]}}"""
-    } })
-  server.createContext("/api/v1/alertmanagers", MetricsServer.jsonHandler { _ =>
-    """{"status":"success","data":{"activeAlertmanagers":[],"droppedAlertmanagers":[]}}""" })
-  server.createContext("/api/v1/notifications", MetricsServer.jsonHandler { _ =>
-    """{"status":"success","data":[]}""" })
+    } }
+  json("/api/v1/alertmanagers") { _ =>
+    """{"status":"success","data":{"activeAlertmanagers":[],"droppedAlertmanagers":[]}}""" }
+  json("/api/v1/notifications") { _ => """{"status":"success","data":[]}""" }
   // TSDB admin API and ingest state (upstream: --web.enable-admin-api),
   // held as ONE immutable snapshot and swapped whole under this server's
   // lock, so the handler threads never see half an update: a reader
@@ -259,37 +261,34 @@ final class MetricsServer(observed: Observed, port: Int = 0,
     // .Request` selected by the Content-Type proto= parameter) — plus
     // the JSON mapping for hand-written bodies. All three wires land in
     // the same shapeIngest → appendIngest, queryable at once.
-    server.createContext("/api/v1/write", MetricsServer.rawBodyHandler {
-      (enc, ctype, raw) =>
-        import boundSrc.df.sparkSession.implicits._
-        val body =
-          if (enc.exists(_.equalsIgnoreCase("snappy")))
-            graft.functions.Snappy.decompress(raw)
-          else raw
-        val isV2 = ctype.exists(_.contains("write.v2"))
-        val isJson = body.nonEmpty && body(0) == '{' &&
-          !ctype.exists(_.contains("protobuf"))
-        val parsed =
-          if (isJson)
-            graft.sources.RemoteWrite.parse(
-              Seq(new String(body, "UTF-8")).toDF("json"))
-          else if (isV2)
-            graft.sources.RemoteWrite.parseV2Pb(Seq(body).toDF("pb"))
-              .filter(!col("is_exemplar"))
-              .select(col("metric"), col("labels"), col("ts"), col("value"))
-          else
-            graft.sources.RemoteWrite.parsePb(Seq(body).toDF("pb"))
-        appendIngest(shapeIngest(parsed, "labels"))
-        """{"status":"success","data":null}"""
-    })
+    json("/api/v1/write") { req =>
+      import boundSrc.df.sparkSession.implicits._
+      val body = req.unsnappied
+      val ctype = req.header("Content-Type")
+      val isV2 = ctype.exists(_.contains("write.v2"))
+      val isJson = body.nonEmpty && body(0) == '{' &&
+        !ctype.exists(_.contains("protobuf"))
+      val parsed =
+        if (isJson)
+          graft.sources.RemoteWrite.parse(
+            Seq(new String(body, "UTF-8")).toDF("json"))
+        else if (isV2)
+          graft.sources.RemoteWrite.parseV2Pb(Seq(body).toDF("pb"))
+            .filter(!col("is_exemplar"))
+            .select(col("metric"), col("labels"), col("ts"), col("value"))
+        else
+          graft.sources.RemoteWrite.parsePb(Seq(body).toDF("pb"))
+      appendIngest(shapeIngest(parsed, "labels"))
+      """{"status":"success","data":null}"""
+    }
     // OTLP receiver (POST /api/v1/otlp/v1/metrics, the 3.x endpoint):
     // same ingest path through the OTLP/JSON translation.
-    server.createContext("/api/v1/otlp/v1/metrics", MetricsServer.bodyHandler { body =>
+    json("/api/v1/otlp/v1/metrics") { req =>
       import boundSrc.df.sparkSession.implicits._
-      val parsed = graft.sources.Otlp.parse(Seq(body).toDF("json"))
+      val parsed = graft.sources.Otlp.parse(Seq(new String(req.body, "UTF-8")).toDF("json"))
       appendIngest(shapeIngest(parsed, "attrs"))
       """{"status":"success","data":null}"""
-    })
+    }
     // REMOTE-READ (POST /api/v1/read, `prometheus.ReadRequest`): the
     // server half of remote_read — raw SAMPLED series for each query's
     // matchers × ms range (the wire a federating Prometheus or Thanos
@@ -298,61 +297,50 @@ final class MetricsServer(observed: Observed, port: Int = 0,
     // ingest-unioned `src` serving /api/v1/query: matchers render to a
     // selector, compile through selectorCond (pushdown-eligible), and
     // the collect rides the usual maxResultRows cap.
-    server.createContext("/api/v1/read", MetricsServer.rawBodyHandlerBin {
-      (enc0, raw0) =>
+    route("/api/v1/read") { req =>
       // Real wire first (a federating Prometheus sends snappy'd
       // ReadRequest protobuf and expects snappy'd ReadResponse protobuf
       // back); the JSON mapping stays for hand-written bodies.
-      val raw = if (enc0.exists(_.equalsIgnoreCase("snappy")))
-        graft.functions.Snappy.decompress(raw0) else raw0
+      val raw = req.unsnappied
       val isJson = raw.nonEmpty && raw(0) == '{'
-      def collectSamples(q: RemoteRead.ReadQuery): Array[org.apache.spark.sql.Row] = {
+      val sKey = boundSrc.seriesKey.map(PromQlParser.labelCol)
+      val value = col(boundSrc.valueCol).cast("double")
+      // one query's matched samples in its ms range, shaped, capped
+      def collectRead(q: RemoteRead.ReadQuery)(
+          shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Array[Row] = {
         val s0 = src
         val cond = PromQlParser.selectorCond(
           s0, RemoteRead.selectorString(q.matchers))
-        val rows = s0.df.filter(cond)
+        val inRange = s0.df.filter(cond)
           .withColumn("__ts_ms", expr(s"unix_millis(${s0.tsCol})"))
           .filter(col("__ts_ms") >= q.startMs && col("__ts_ms") <= q.endMs)
-          .select(s0.seriesKey.map(PromQlParser.labelCol) :+ col("__ts_ms") :+
-            col(s0.valueCol).cast("double").as("__v"): _*)
-          .orderBy(s0.seriesKey.map(PromQlParser.labelCol) :+ col("__ts_ms"): _*)
-          .limit(maxResultRows + 1)
-          .collect()
-        if (rows.length > maxResultRows)
-          throw new MetricsServer.ResultTooLarge(maxResultRows)
-        rows
+        MetricsServer.collectCapped(shape(inRange), maxResultRows).rows
       }
+      def collectSamples(q: RemoteRead.ReadQuery): Array[Row] =
+        collectRead(q) {
+          _.select(sKey :+ col("__ts_ms") :+ value.as("__v"): _*)
+            .orderBy(sKey :+ col("__ts_ms"): _*)
+        }
       // series cut into ≤120-sample XOR chunks IN SPARK (keyed window +
       // collect_list + XorChunkEncode), so the driver only holds encoded
       // chunk rows — ~10 bytes/sample — and chunking parallelizes across
       // executors; shared by both streamed faces.
-      def collectChunkRows(q: RemoteRead.ReadQuery): Array[org.apache.spark.sql.Row] = {
-        val s0 = src
-        val cond = PromQlParser.selectorCond(
-          s0, RemoteRead.selectorString(q.matchers))
-        val sKey = s0.seriesKey.map(PromQlParser.labelCol)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(sKey: _*).orderBy(col("__ts_ms"), col("__b"))
-        val rows = s0.df.filter(cond)
-          .withColumn("__ts_ms", expr(s"unix_millis(${s0.tsCol})"))
-          .filter(col("__ts_ms") >= q.startMs && col("__ts_ms") <= q.endMs)
-          .withColumn("__b", graft.functions.VectorFunctions
-            .doubleBits(col(s0.valueCol).cast("double")))
-          .withColumn("__seq", (row_number().over(w) - 1).cast("long"))
-          .withColumn("__chunk", expr("__seq div 120"))
-          .groupBy(sKey :+ col("__chunk"): _*)
-          .agg(min(col("__ts_ms")).as("__min_t"),
-            max(col("__ts_ms")).as("__max_t"),
-            graft.functions.XorChunk.encodeCol(sort_array(collect_list(
-              struct(col("__ts_ms").as("t"), col("__b").as("b")))))
-              .as("__data"))
-          .orderBy(sKey :+ col("__chunk"): _*)
-          .limit(maxResultRows + 1)
-          .collect()
-        if (rows.length > maxResultRows)
-          throw new MetricsServer.ResultTooLarge(maxResultRows)
-        rows
-      }
+      def collectChunkRows(q: RemoteRead.ReadQuery): Array[Row] =
+        collectRead(q) { df =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(sKey: _*).orderBy(col("__ts_ms"), col("__b"))
+          df.withColumn("__b", graft.functions.VectorFunctions.doubleBits(value))
+            .withColumn("__seq", (row_number().over(w) - 1).cast("long"))
+            .withColumn("__chunk", expr("__seq div 120"))
+            .groupBy(sKey :+ col("__chunk"): _*)
+            .agg(min(col("__ts_ms")).as("__min_t"),
+              max(col("__ts_ms")).as("__max_t"),
+              graft.functions.XorChunk.encodeCol(sort_array(collect_list(
+                struct(col("__ts_ms").as("t"), col("__b").as("b")))))
+                .as("__data"))
+            .orderBy(sKey :+ col("__chunk"): _*)
+        }
+      val chunkedType = "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse"
       if (!isJson) {
         // protobuf face — the REAL wire both ways: SAMPLES as snappy'd
         // ReadResponse, STREAMED_XOR_CHUNKS as chunked-transport frames
@@ -360,10 +348,10 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         // chunked.go; not snappy'd — chunk data is already compressed).
         // Absent end (proto3 zero) reads open-ended.
         import graft.functions.ProtoWire
-        val req = ProtoWire.decodeReadRequest(raw)
-        val streamed = req.acceptedTypes.find(t => t == 0 || t == 1)
+        val rr = ProtoWire.decodeReadRequest(raw)
+        val streamed = rr.acceptedTypes.find(t => t == 0 || t == 1)
           .contains(1)
-        val queries = req.queries.map { q =>
+        val queries = rr.queries.map { q =>
           RemoteRead.ReadQuery(q.startMs,
             if (q.endMs == 0L) Long.MaxValue else q.endMs,
             q.matchers.map { m =>
@@ -383,14 +371,13 @@ final class MetricsServer(observed: Observed, port: Int = 0,
           val body = graft.functions.Snappy.compress(
             MetricsServer.remoteReadPb(results, boundSrc.metricCol,
               boundSrc.seriesKey))
-          ("application/x-protobuf", Some("snappy"), body)
+          Reply(200, "application/x-protobuf", body, Some("snappy"))
         } else {
           val msgs = queries.zipWithIndex.flatMap { case (q, qi) =>
             MetricsServer.chunkedReadPb(collectChunkRows(q),
               boundSrc.metricCol, boundSrc.seriesKey, qi)
           }
-          ("application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse",
-            None, ProtoWire.frameMessages(msgs))
+          Reply(200, chunkedType, ProtoWire.frameMessages(msgs))
         }
       } else {
         val body = new String(raw, "UTF-8")
@@ -403,9 +390,8 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         val queries = RemoteRead.parseRequest(body)
         if (!streamed) {
           val results = queries.map(collectSamples)
-          ("application/json", None,
-            MetricsServer.remoteReadJson(results, boundSrc.metricCol,
-              boundSrc.seriesKey).getBytes("UTF-8"))
+          Reply.json(MetricsServer.remoteReadJson(results, boundSrc.metricCol,
+            boundSrc.seriesKey))
         } else {
         // STREAMED_XOR_CHUNKS over the JSON mapping (hand-written
         // bodies): one JSON line per series frame, chunk data = the REAL
@@ -415,99 +401,82 @@ final class MetricsServer(observed: Observed, port: Int = 0,
           MetricsServer.chunkedReadFrames(collectChunkRows(q),
             boundSrc.metricCol, boundSrc.seriesKey, qi)
         }
-        ("application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse",
-          None, frames.mkString("", "\n", "\n").getBytes("UTF-8"))
+        Reply(200, chunkedType, frames.mkString("", "\n", "\n"))
         }
       }
-    })
-    server.createContext("/api/v1/admin/tsdb/delete_series",
-      MetricsServer.jsonHandler { params =>
-        val sel = params.getOrElse("match[]",
-          throw new IllegalArgumentException("missing 'match[]' parameter"))
-        val mint = params.get("start").map(t =>
-          MetricsServer.epochSec(MetricsServer.parseTime(t)) * 1000L)
-          .getOrElse(Long.MinValue)
-        val maxt = params.get("end").map(t =>
-          MetricsServer.epochSec(MetricsServer.parseTime(t)) * 1000L)
-          .getOrElse(Long.MaxValue)
-        val t = Tombstones.Tombstone(
-          PromQlParser.selectorMatchers(boundSrc, sel), mint, maxt)
-        synchronized { state = state.copy(tombstones = state.tombstones :+ t) }
-        """{"status":"success","data":null}"""
-      })
-    server.createContext("/api/v1/admin/tsdb/clean_tombstones",
-      MetricsServer.jsonHandler { _ =>
-        // the fold takes the masked ingest in too, so the rows go with it
-        synchronized {
-          if (state.tombstones.nonEmpty)
-            state = MetricsServer.Serving(Some(src.df), Vector.empty, None, Nil)
-        }
-        """{"status":"success","data":null}"""
-      })
+    }
+    // one tombstone per match[] selector: upstream deletes every
+    // selected series
+    json("/api/v1/admin/tsdb/delete_series") { req =>
+      val sels = req.needAll("match[]")
+      val mint = req.get("start").map(t =>
+        MetricsServer.epochSec(MetricsServer.parseTime(t)) * 1000L)
+        .getOrElse(Long.MinValue)
+      val maxt = req.get("end").map(t =>
+        MetricsServer.epochSec(MetricsServer.parseTime(t)) * 1000L)
+        .getOrElse(Long.MaxValue)
+      val ts = sels.map(sel => Tombstones.Tombstone(
+        PromQlParser.selectorMatchers(boundSrc, sel), mint, maxt))
+      synchronized { state = state.copy(tombstones = state.tombstones ++ ts) }
+      """{"status":"success","data":null}"""
+    }
+    json("/api/v1/admin/tsdb/clean_tombstones") { _ =>
+      // the fold takes the masked ingest in too, so the rows go with it
+      synchronized {
+        if (state.tombstones.nonEmpty)
+          state = MetricsServer.Serving(Some(src.df), Vector.empty, None, Nil)
+      }
+      """{"status":"success","data":null}"""
+    }
     // Snapshot (upstream api/v1/admin/tsdb/snapshot): persist the current
     // tombstone-masked view as parquet and return the snapshot name. The
     // write path is the Hadoop FS API, so the base can be hdfs://s3a://.
-    server.createContext("/api/v1/admin/tsdb/snapshot",
-      MetricsServer.jsonHandler { _ =>
-        val name = "graft-snap-" + java.lang.Long.toHexString(System.nanoTime())
-        val base = new java.io.File(sys.props("java.io.tmpdir"), "graft-snapshots")
-        val dir = new java.io.File(base, name)
-        src.df.write.mode("error").parquet(dir.getAbsolutePath)
-        s"""{"status":"success","data":{"name":"${MetricsServer.jsonEscape(name)}","dir":"${MetricsServer.jsonEscape(dir.getAbsolutePath)}"}}"""
-      })
-    server.createContext("/api/v1/query", MetricsServer.jsonHandler { params =>
-      val query = params.getOrElse("query",
-        throw new IllegalArgumentException("missing 'query' parameter"))
-      val t = MetricsServer.parseTime(params.getOrElse("time",
-        throw new IllegalArgumentException("missing 'time' parameter")))
-      // stats=all (upstream query stats): totals read from the EXECUTED
-      // plan's own SQLMetrics — totalQueryableSamples = rows leaving the
-      // scans, peakSamples = the widest operator — no second pass.
-      val wantStats = params.get("stats").contains("all")
-      val limited = PromQlParser.eval(src, query, t).limit(maxResultRows + 1)
-      val t0 = System.nanoTime()
-      val rows = limited.collect()
-      val evalSec = (System.nanoTime() - t0) / 1e9
-      if (rows.length > maxResultRows)
-        throw new MetricsServer.ResultTooLarge(maxResultRows)
-      val body =
+    json("/api/v1/admin/tsdb/snapshot") { _ =>
+      val name = "graft-snap-" + java.lang.Long.toHexString(System.nanoTime())
+      val base = new java.io.File(sys.props("java.io.tmpdir"), "graft-snapshots")
+      val dir = new java.io.File(base, name)
+      src.df.write.mode("error").parquet(dir.getAbsolutePath)
+      s"""{"status":"success","data":{"name":"${MetricsServer.jsonEscape(name)}","dir":"${MetricsServer.jsonEscape(dir.getAbsolutePath)}"}}"""
+    }
+    // The instant and range endpoints' one capped collect. stats=all
+    // (upstream query stats) splices data.stats inside the data object,
+    // read from the EXECUTED plan's own SQLMetrics — no second pass.
+    def evalJson(req: Request, df: org.apache.spark.sql.DataFrame)(
+        render: Array[Row] => String): String = {
+      val capped = MetricsServer.collectCapped(df, maxResultRows)
+      val body = render(capped.rows)
+      if (!req.get("stats").contains("all")) body
+      else body.patch(body.length - 2,
+        MetricsServer.statsJson(capped.frame.queryExecution.executedPlan,
+          capped.evalSec) + "}", 1)
+    }
+    json("/api/v1/query") { req =>
+      val query = req.need("query")
+      val t = MetricsServer.parseTime(req.need("time"))
+      evalJson(req, PromQlParser.eval(src, query, t)) { rows =>
         if (PromQlParser.isScalarQuery(query))
           MetricsServer.scalarJson(rows.head.getAs[Double]("value"),
             MetricsServer.epochSec(t))
         else MetricsServer.vectorJson(rows, MetricsServer.epochSec(t))
-      if (!wantStats) body
-      // splice inside the data object (upstream: data.stats)
-      else body.patch(body.length - 2,
-        MetricsServer.statsJson(limited.queryExecution.executedPlan, evalSec) + "}", 1)
-    })
-    server.createContext("/api/v1/query_range", MetricsServer.jsonHandler { params =>
-      def need(k: String) = params.getOrElse(k,
-        throw new IllegalArgumentException(s"missing '$k' parameter"))
-      val start = MetricsServer.parseTime(need("start"))
-      val end = MetricsServer.parseTime(need("end"))
-      val step = MetricsServer.parseDurationSec(need("step"))
-      val limited = PromQlParser.evalRange(src, need("query"), start, end, step)
-        .limit(maxResultRows + 1)
-      val t0 = System.nanoTime()
-      val rows = limited.collect()
-      val evalSec = (System.nanoTime() - t0) / 1e9
-      if (rows.length > maxResultRows)
-        throw new MetricsServer.ResultTooLarge(maxResultRows)
-      val body = MetricsServer.matrixJson(rows)
-      if (!params.get("stats").contains("all")) body
-      else body.patch(body.length - 2,
-        MetricsServer.statsJson(limited.queryExecution.executedPlan, evalSec) + "}", 1)
-    })
-    server.createContext("/api/v1/labels", MetricsServer.jsonHandler { params =>
+      }
+    }
+    json("/api/v1/query_range") { req =>
+      val start = MetricsServer.parseTime(req.need("start"))
+      val end = MetricsServer.parseTime(req.need("end"))
+      val step = MetricsServer.parseDurationSec(req.need("step"))
+      evalJson(req, PromQlParser.evalRange(src, req.need("query"), start, end, step))(
+        MetricsServer.matrixJson)
+    }
+    json("/api/v1/labels") { req =>
       // the data model's label set is the source's series-key columns;
       // `limit` caps the list (upstream: 0/absent = unlimited)
       val names = MetricsServer.applyLimit(
-        (src.seriesKey :+ "__name__").distinct.sorted, params)
+        (src.seriesKey :+ "__name__").distinct.sorted, req)
       s"""{"status":"success","data":[${names.map(n => "\"" + n + "\"").mkString(",")}]}"""
-    })
-    server.createContext("/api/v1/label/", MetricsServer.jsonHandler2 { (path, params) =>
+    }
+    json("/api/v1/label/") { req =>
       // /api/v1/label/<name>/values
-      val name = path.stripPrefix("/api/v1/label/").stripSuffix("/values")
+      val name = req.path.stripPrefix("/api/v1/label/").stripSuffix("/values")
       val colName = if (name == "__name__") src.metricCol else name
       require(src.seriesKey.contains(colName) || colName == src.metricCol,
         s"unknown label: $name")
@@ -517,19 +486,17 @@ final class MetricsServer(observed: Observed, port: Int = 0,
       // Push `limit` into the PLAN (upstream truncates to the limit): a
       // label whose distinct count exceeds maxResultRows must still serve
       // a small-limit request instead of throwing ResultTooLarge.
-      val capped = params.get("limit").map(_.toInt).filter(_ > 0)
+      val capped = req.get("limit").map(_.toInt).filter(_ > 0)
         .map(distinctVals.limit).getOrElse(distinctVals)
-      val rows = MetricsServer.collectCapped(capped, maxResultRows)
+      val rows = MetricsServer.collectCapped(capped, maxResultRows).rows
       val vals = MetricsServer.applyLimit(
         rows.toSeq.map(r => "\"" + MetricsServer.jsonEscape(r.getString(0)) + "\""),
-        params)
+        req)
       s"""{"status":"success","data":[${vals.mkString(",")}]}"""
-    })
-    server.createContext("/api/v1/series", MetricsServer.jsonHandler { params =>
-      val sel = params.getOrElse("match[]",
-        throw new IllegalArgumentException("missing 'match[]' parameter"))
+    }
+    json("/api/v1/series") { req =>
       val rows = MetricsServer.collectCapped(
-        PromQlParser.seriesFor(src, sel), maxResultRows)
+        PromQlParser.seriesFor(src, req.needAll("match[]")), maxResultRows).rows
       val labels = rows.headOption.toSeq
         .flatMap(_.schema.fields.zipWithIndex.map { case (f, i) => (f.name, i) })
       val items = rows.map { r =>
@@ -538,13 +505,13 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         }.mkString("{", ",", "}")
       }
       s"""{"status":"success","data":[${items.mkString(",")}]}"""
-    })
+    }
     // GET /api/v1/status/tsdb — the cardinality-stats face (upstream
     // api/v1/status/tsdb): top-10 series counts by metric name, label
     // value counts by label name, and series counts by label=value pair.
     // Three keyed distinct-aggregations over the bound source (each a
     // map-side partial at any corpus size); output is top-10-sized.
-    server.createContext("/api/v1/status/tsdb", MetricsServer.jsonHandler { _ =>
+    json("/api/v1/status/tsdb") { _ =>
       def items(rows: Array[Row]) = rows.map(r =>
         s"""{"name":"${MetricsServer.jsonEscape(r.getString(0))}","value":${r.getLong(1)}}""")
         .mkString("[", ",", "]")
@@ -553,7 +520,7 @@ final class MetricsServer(observed: Observed, port: Int = 0,
       val byMetric = MetricsServer.collectCapped(
         src.df.groupBy(col(src.metricCol).cast("string").as("n"))
           .agg(nSeries)
-          .orderBy(col("v").desc, col("n")).limit(10), 10)
+          .orderBy(col("v").desc, col("n")).limit(10), 10).rows
       val byLabel = src.seriesKey.map { l =>
         val c = src.df.select(col(l).cast("string").as("v"))
           .filter(col("v").isNotNull).distinct().count()
@@ -567,58 +534,28 @@ final class MetricsServer(observed: Observed, port: Int = 0,
             src.seriesKey.map(PromQlParser.labelCol): _*)
           .groupBy(col("n"))
           .agg(nSeries)
-          .orderBy(col("v").desc, col("n")).limit(10), 10)
+          .orderBy(col("v").desc, col("n")).limit(10), 10).rows
       s"""{"status":"success","data":{"seriesCountByMetricName":${items(byMetric)},""" +
         s""""labelValueCountByLabelName":$byLabel,""" +
         s""""seriesCountByLabelValuePair":${items(byPair)}}}"""
-    })
+    }
     // GET /federate?match[]=sel&match[]=sel2&time=... — the federation
     // scrape face (prometheus/web/federate.go): for every series matching
     // ANY match[] selector, the newest sample within the 5m staleness
     // window, as exposition text with the ORIGINAL sample timestamp (ms).
-    // Engine convention: `time` is explicit (no background "now").
-    // Repeated match[] params require the raw query string — the shared
-    // jsonHandler collapses duplicate keys, and federation's content type
-    // is text, so this endpoint owns its handler. ONE keyed max_by per
-    // request (map-side partial; series-sized output under the standard
-    // cap), never a sample-sized collect. External labels are added only
-    // where the series doesn't already carry the label (the upstream
-    // honor-labels federation rule).
-    server.createContext("/federate", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (code, body, ctype) =
-          try {
-            val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-            val pairs = raw.split("&").filter(_.nonEmpty).toSeq.map { kv =>
-              val eq = kv.indexOf('=')
-              val k = java.net.URLDecoder
-                .decode(if (eq < 0) kv else kv.substring(0, eq), "UTF-8")
-              val v = if (eq < 0) "" else java.net.URLDecoder
-                .decode(kv.substring(eq + 1), "UTF-8")
-              k -> v
-            }
-            val matches = pairs.collect { case ("match[]", v) => v }
-            require(matches.nonEmpty, "missing 'match[]' parameter")
-            val t = MetricsServer.parseTime(pairs.collectFirst {
-              case ("time", v) => v
-            }.getOrElse(throw new IllegalArgumentException(
-              "missing 'time' parameter")))
-            val txt = MetricsServer.federateText(src, matches, t,
-              externalLabels, maxResultRows)
-            (200, txt, "text/plain; version=0.0.4; charset=utf-8")
-          } catch {
-            case e: MetricsServer.ResultTooLarge =>
-              (422, String.valueOf(e.getMessage) + "\n", "text/plain; charset=utf-8")
-            case e: Throwable =>
-              (400, String.valueOf(e.getMessage) + "\n", "text/plain; charset=utf-8")
-          }
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", ctype)
-        ex.sendResponseHeaders(code, bytes.length.toLong)
-        val os = ex.getResponseBody
-        try os.write(bytes) finally os.close()
-      }
-    })
+    // Engine convention: `time` is explicit (no background "now"). Errors
+    // answer in text, as federation's content type is. ONE keyed max_by
+    // per request (map-side partial; series-sized output under the
+    // standard cap), never a sample-sized collect. External labels are
+    // added only where the series doesn't already carry the label (the
+    // upstream honor-labels federation rule).
+    route("/federate", MetricsServer.textError) { req =>
+      val matches = req.all("match[]")
+      require(matches.nonEmpty, "missing 'match[]' parameter")
+      val t = MetricsServer.parseTime(req.need("time"))
+      Reply(200, MetricsServer.Exposition, MetricsServer.federateText(src,
+        matches, t, externalLabels, maxResultRows))
+    }
     exemplarFrame.foreach { ef =>
       // /api/v1/query_exemplars — the OpenMetrics exemplar face: series
       // selector + [start, end] over a per-bucket newest-exemplar frame.
@@ -631,20 +568,18 @@ final class MetricsServer(observed: Observed, port: Int = 0,
       // |series|·|buckets|-sized by construction, the filter is
       // selector + time-range pushdown, and the collect rides the same
       // hard cap as every query endpoint.
-      server.createContext("/api/v1/query_exemplars", MetricsServer.jsonHandler { params =>
-        def need(k: String) = params.getOrElse(k,
-          throw new IllegalArgumentException(s"missing '$k' parameter"))
-        val startT = MetricsServer.parseTime(need("start"))
-        val endT = MetricsServer.parseTime(need("end"))
+      json("/api/v1/query_exemplars") { req =>
+        val startT = MetricsServer.parseTime(req.need("start"))
+        val endT = MetricsServer.parseTime(req.need("end"))
         val labelCols = ef.columns.filterNot(Set("sign", "idx", "le", "exemplar")).toSeq
         val rows = MetricsServer.collectCapped(
-          ef.filter(PromQlParser.selectorCond(src, need("query")))
+          ef.filter(PromQlParser.selectorCond(src, req.need("query")))
             .filter(col("exemplar.ts") >= to_timestamp(lit(startT)) &&
                     col("exemplar.ts") <= to_timestamp(lit(endT)))
             .orderBy(labelCols.map(col) :+ col("exemplar.ts"): _*),
-          maxResultRows)
+          maxResultRows).rows
         MetricsServer.exemplarsJson(rows, labelCols, src.metricCol)
-      })
+      }
     }
     if (rules.nonEmpty) {
       // /api/v1/alerts and /api/v1/rules — the rule-group face of the API.
@@ -653,18 +588,16 @@ final class MetricsServer(observed: Observed, port: Int = 0,
       // iff the alert has been continuously active for the trailing `for`
       // window ending at `time`, which a grid of ceil(for/step)+1 steps
       // decides exactly — longer history cannot change the answer.
-      server.createContext("/api/v1/alerts", MetricsServer.jsonHandler { params =>
-        val t = MetricsServer.parseTime(params.getOrElse("time",
-          throw new IllegalArgumentException("missing 'time' parameter")))
-        val step = MetricsServer.parseDurationSec(params.getOrElse("step", "60"))
+      json("/api/v1/alerts") { req =>
+        val t = MetricsServer.parseTime(req.need("time"))
+        val step = MetricsServer.parseDurationSec(req.get("step").getOrElse("60"))
         val alerts = rules.flatMap(r =>
           MetricsServer.alertsAt(src, r, t, step, maxResultRows).map(_._1))
         s"""{"status":"success","data":{"alerts":[${alerts.mkString(",")}]}}"""
-      })
-      server.createContext("/api/v1/rules", MetricsServer.jsonHandler { params =>
-        val t = MetricsServer.parseTime(params.getOrElse("time",
-          throw new IllegalArgumentException("missing 'time' parameter")))
-        val step = MetricsServer.parseDurationSec(params.getOrElse("step", "60"))
+      }
+      json("/api/v1/rules") { req =>
+        val t = MetricsServer.parseTime(req.need("time"))
+        val step = MetricsServer.parseDurationSec(req.get("step").getOrElse("60"))
         val rjs = rules.map { r =>
           val alerts = MetricsServer.alertsAt(src, r, t, step, maxResultRows)
           val state =
@@ -679,7 +612,7 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         }
         s"""{"status":"success","data":{"groups":[{"name":"graft",""" +
           s""""rules":[${rjs.mkString(",")}]}]}}"""
-      })
+      }
     }
   }
   // A small pool, not the listener thread: the query/metadata endpoints
@@ -714,13 +647,98 @@ object MetricsServer {
   final class ResultTooLarge(val max: Int) extends RuntimeException(
     s"query result exceeds $max rows; narrow the selector or raise maxResultRows")
 
-  /** `limit(max+1)` then collect: the executor-side plan ships at most
-    * max+1 rows regardless of result cardinality; the +1 row distinguishes
-    * "exactly max" from "over the cap". */
+  /** One request as every endpoint sees it: path, method, headers, the
+    * body read once, and the parameters — the URL query, then the body of
+    * a form POST (upstream api.go reads r.Form, which merges both; Grafana
+    * POSTs long queries this way). Keys are percent-decoded too:
+    * spec-conformant clients send match%5B%5D= for match[]=. */
+  private[metrics] final class Request(ex: HttpExchange) {
+    val path: String = ex.getRequestURI.getPath
+    val method: String = ex.getRequestMethod
+    val body: Array[Byte] = ex.getRequestBody.readAllBytes()
+    def header(name: String): Option[String] =
+      Option(ex.getRequestHeaders.getFirst(name))
+    // Lazy: a wire receiver's body is never form-decoded, even when the
+    // client labels it form-urlencoded (HttpURLConnection's POST default).
+    lazy val params: Seq[(String, String)] = {
+      def form(s: String) = s.split("&").filter(_.nonEmpty).toSeq.map { kv =>
+        val eq = kv.indexOf('=')
+        val k = java.net.URLDecoder
+          .decode(if (eq < 0) kv else kv.substring(0, eq), "UTF-8")
+        val v = if (eq < 0) "" else java.net.URLDecoder
+          .decode(kv.substring(eq + 1), "UTF-8")
+        k -> v
+      }
+      form(Option(ex.getRequestURI.getRawQuery).getOrElse("")) ++
+        (if (method == "POST" && header("Content-Type")
+              .exists(_.startsWith("application/x-www-form-urlencoded")))
+          form(new String(body, "UTF-8"))
+        else Nil)
+    }
+    /** Every value of a repeated key (`match[]`), URL values first. */
+    def all(key: String): Seq[String] = params.collect { case (`key`, v) => v }
+    def needAll(key: String): Seq[String] = {
+      val vs = all(key)
+      if (vs.isEmpty) throw new IllegalArgumentException(s"missing '$key' parameter")
+      vs
+    }
+    /** A single-valued key: its last value, so a body value wins over a
+      * URL value, as ParseForm's ordering does. */
+    def get(key: String): Option[String] = all(key).lastOption
+    def need(key: String): String = needAll(key).last
+    /** The body, snappy-decoded when Content-Encoding says so (the
+      * remote-write and remote-read wire). */
+    def unsnappied: Array[Byte] =
+      if (header("Content-Encoding").exists(_.equalsIgnoreCase("snappy")))
+        graft.functions.Snappy.decompress(body)
+      else body
+  }
+
+  /** One reply: status, Content-Type, optional Content-Encoding, body. */
+  private[metrics] final case class Reply(code: Int, contentType: String,
+      body: Array[Byte], encoding: Option[String] = None)
+  private[metrics] object Reply {
+    def apply(code: Int, contentType: String, body: String): Reply =
+      Reply(code, contentType, body.getBytes("UTF-8"))
+    def json(body: String, code: Int = 200): Reply =
+      Reply(code, "application/json", body)
+  }
+
+  /** Exposition format 0.0.4, the `/metrics` and `/federate` body. */
+  private val Exposition = "text/plain; version=0.0.4; charset=utf-8"
+
+  /** The Prometheus API's JSON error envelope. */
+  private def jsonError(code: Int, errorType: String, msg: String): Reply =
+    Reply.json(s"""{"status":"error","errorType":"$errorType","error":"${jsonEscape(msg)}"}""",
+      code)
+
+  /** A plain-text error body (the `/federate` face). */
+  private def textError(code: Int, errorType: String, msg: String): Reply =
+    Reply(code, "text/plain; charset=utf-8", msg + "\n")
+
+  /** The one request path: parse the request, run the endpoint, map its
+    * error — [[ResultTooLarge]] → 422 `too_many_results`, anything else →
+    * 400 `bad_data`, bodied by `errorReply` — and write the reply: its
+    * headers, `sendResponseHeaders(code, length)`, one write of the body. */
+  private def handler(f: Request => Reply,
+                      errorReply: (Int, String, String) => Reply): HttpHandler = ex => {
+    val reply =
+      try f(new Request(ex))
+      catch {
+        case e: ResultTooLarge =>
+          errorReply(422, "too_many_results", String.valueOf(e.getMessage))
+        case e: Throwable => errorReply(400, "bad_data", String.valueOf(e.getMessage))
+      }
+    ex.getResponseHeaders.set("Content-Type", reply.contentType)
+    reply.encoding.foreach(ex.getResponseHeaders.set("Content-Encoding", _))
+    ex.sendResponseHeaders(reply.code, reply.body.length.toLong)
+    val os = ex.getResponseBody
+    try os.write(reply.body) finally os.close()
+  }
+
   /** Upstream `limit` parameter: 0 or absent = unlimited. */
-  private[metrics] def applyLimit[A](xs: Seq[A],
-                                     params: Map[String, String]): Seq[A] =
-    params.get("limit").map(_.toInt).filter(_ > 0).map(xs.take).getOrElse(xs)
+  private[metrics] def applyLimit[A](xs: Seq[A], req: Request): Seq[A] =
+    req.get("limit").map(_.toInt).filter(_ > 0).map(xs.take).getOrElse(xs)
 
   /** A physical plan's children, AQE-unwrapped: the adaptive node and
     * its query stages hide the real operators as inner plans, not
@@ -746,11 +764,23 @@ object MetricsServer {
       s""""peakSamples":${(outRows(plan) :+ 0L).max}}}"""
   }
 
+  /** A capped collect's rows, with the capped frame (its executed plan)
+    * and the collect's wall seconds that `stats=all` reads ([[statsJson]]). */
+  private[metrics] final case class Capped(rows: Array[Row],
+                                           frame: org.apache.spark.sql.DataFrame,
+                                           evalSec: Double)
+
+  /** `limit(max+1)` then collect: the executor-side plan ships at most
+    * max+1 rows regardless of result cardinality; the +1 row distinguishes
+    * "exactly max" from "over the cap". */
   private[metrics] def collectCapped(df: org.apache.spark.sql.DataFrame,
-                                     max: Int): Array[Row] = {
-    val rows = df.limit(max + 1).collect()
+                                     max: Int): Capped = {
+    val limited = df.limit(max + 1)
+    val t0 = System.nanoTime()
+    val rows = limited.collect()
+    val evalSec = (System.nanoTime() - t0) / 1e9
     if (rows.length > max) throw new ResultTooLarge(max)
-    rows
+    Capped(rows, limited, evalSec)
   }
 
   /** One rule's alert instances at instant `t`: evaluate the for-duration
@@ -768,7 +798,7 @@ object MetricsServer {
     val df = AlertRules.evalRule(src, rule, start, t, stepSec)
     val rows = collectCapped(
       df.filter(col("step_ts") === org.apache.spark.sql.functions.lit(
-        java.sql.Timestamp.valueOf(t))), max)
+        java.sql.Timestamp.valueOf(t))), max).rows
     val fields = rows.headOption.toSeq
       .flatMap(_.schema.fields.zipWithIndex)
     val labelIdx = fields.collect {
@@ -870,7 +900,7 @@ object MetricsServer {
     java.time.LocalDateTime.parse(plainTs.replace(' ', 'T'))
       .toEpochSecond(java.time.ZoneOffset.UTC)
 
-  private[metrics] def jsonEscape(s: String): String = s.flatMap {
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -881,7 +911,7 @@ object MetricsServer {
   }
 
   /** Exposition-format label-value escaping: backslash, quote, newline. */
-  private def promEscape(s: String): String = s.flatMap {
+  private[metrics] def promEscape(s: String): String = s.flatMap {
     case '\\' => "\\\\"
     case '"' => "\\\""
     case '\n' => "\\n"
@@ -915,7 +945,7 @@ object MetricsServer {
         struct(col(src.tsCol), col(src.orderCol))).as("s"))
       .select(src.seriesKey.map(PromQlParser.labelCol) :+ col("s.v").as("__fv") :+
         col("s.sts").as("__fts"): _*)
-    val rows = collectCapped(newest, max)
+    val rows = collectCapped(newest, max).rows
     val sb = new StringBuilder
     rows.toSeq
       .map { r =>
@@ -944,6 +974,30 @@ object MetricsServer {
     sb.result()
   }
 
+  /** Remote-read rows, sorted by (seriesKey, …), grouped per series in
+    * arrival order; each series keyed by its label pairs, the metric
+    * column named `__name__`. Shared by all four remote-read faces. */
+  private def bySeries(rows: Array[Row], metricCol: String,
+                       seriesKey: Seq[String]): Seq[(Seq[(String, String)], Seq[Row])] = {
+    val grouped = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[(String, String)], scala.collection.mutable.ArrayBuffer[Row]]
+    rows.foreach { r =>
+      val ls = seriesKey.map { k =>
+        (if (k == metricCol) "__name__" else k) ->
+          String.valueOf(r.getAs[Any](k))
+      }
+      grouped.getOrElseUpdate(ls,
+        scala.collection.mutable.ArrayBuffer.empty) += r
+    }
+    grouped.toSeq.map { case (ls, rs) => (ls, rs.toSeq) }
+  }
+
+  /** A series' label pairs in protobuf-JSON `Label` form. */
+  private def labelPairsJson(ls: Seq[(String, String)]): String =
+    ls.map { case (n, v) =>
+      s"""{"name":"${jsonEscape(n)}","value":"${jsonEscape(v)}"}"""
+    }.mkString("[", ",", "]")
+
   /** protobuf-JSON `ReadResponse`: one result per request query, each a
     * list of timeseries with full label pair sets and ms samples. Rows
     * arrive sorted by (seriesKey, ts); grouping preserves that order.
@@ -953,28 +1007,14 @@ object MetricsServer {
       metricCol: String, seriesKey: Seq[String]): String = {
     def sampleVal(d: Double): String =
       if (d.isNaN || d.isInfinite) "\"" + fmtVal(d) + "\"" else fmtVal(d)
-    def seriesJson(rows: Array[Row]): String = {
-      val grouped = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[(String, String)], scala.collection.mutable.ArrayBuffer[Row]]
-      rows.foreach { r =>
-        val ls = seriesKey.map { k =>
-          (if (k == metricCol) "__name__" else k) ->
-            String.valueOf(r.getAs[Any](k))
-        }
-        grouped.getOrElseUpdate(ls,
-          scala.collection.mutable.ArrayBuffer.empty) += r
-      }
-      grouped.map { case (ls, rs) =>
-        val labels = ls.map { case (n, v) =>
-          s"""{"name":"${jsonEscape(n)}","value":"${jsonEscape(v)}"}"""
-        }.mkString("[", ",", "]")
+    def seriesJson(rows: Array[Row]): String =
+      bySeries(rows, metricCol, seriesKey).map { case (ls, rs) =>
         val samples = rs.map { r =>
           s"""{"value":${sampleVal(r.getAs[Double]("__v"))},""" +
             s""""timestamp":${r.getAs[Long]("__ts_ms")}}"""
         }.mkString("[", ",", "]")
-        s"""{"labels":$labels,"samples":$samples}"""
+        s"""{"labels":${labelPairsJson(ls)},"samples":$samples}"""
       }.mkString("[", ",", "]")
-    }
     s"""{"results":[${results.map(rs =>
       s"""{"timeseries":${seriesJson(rs)}}""").mkString(",")}]}"""
   }
@@ -986,24 +1026,13 @@ object MetricsServer {
   private[metrics] def remoteReadPb(results: Seq[Array[Row]],
       metricCol: String, seriesKey: Seq[String]): Array[Byte] = {
     import graft.functions.ProtoWire
-    def seriesOf(rows: Array[Row]): Seq[ProtoWire.Series] = {
-      val grouped = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[(String, String)], scala.collection.mutable.ArrayBuffer[Row]]
-      rows.foreach { r =>
-        val ls = seriesKey.map { k =>
-          (if (k == metricCol) "__name__" else k) ->
-            String.valueOf(r.getAs[Any](k))
-        }
-        grouped.getOrElseUpdate(ls,
-          scala.collection.mutable.ArrayBuffer.empty) += r
-      }
-      grouped.map { case (ls, rs) =>
+    def seriesOf(rows: Array[Row]): Seq[ProtoWire.Series] =
+      bySeries(rows, metricCol, seriesKey).map { case (ls, rs) =>
         ProtoWire.Series(
           ls.map { case (n, v) => ProtoWire.Label(n, v) },
-          rs.toSeq.map(r => ProtoWire.Sample(
+          rs.map(r => ProtoWire.Sample(
             r.getAs[Double]("__v"), r.getAs[Long]("__ts_ms"))))
-      }.toSeq
-    }
+      }
     ProtoWire.encodeReadResponse(results.map(seriesOf))
   }
 
@@ -1088,60 +1117,13 @@ object MetricsServer {
     s"""{"status":"success","data":[${items.mkString(",")}]}"""
   }
 
-  /** Wraps a params → JSON function as a handler with Prometheus-style
-    * error payloads (400 + `status: error`). */
-  private def jsonHandler(f: Map[String, String] => String): HttpHandler =
-    jsonHandler2((_, params) => f(params))
-
-  /** [[bodyHandler]] whose function also picks the response
-    * Content-Type (remote-read response negotiation). Errors fall back
-    * to the JSON envelope, as upstream's error paths do. */
-  private def bodyHandlerCt(f: String => (String, String)): HttpHandler =
-    new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (code, ctype, body) =
-          try {
-            val in = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-            val (ct, b) = f(in)
-            (200, ct, b)
-          } catch {
-            case e: ResultTooLarge =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (422, "application/json",
-                s"""{"status":"error","errorType":"too_many_results","error":"$msg"}""")
-            case e: Throwable =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (400, "application/json",
-                s"""{"status":"error","errorType":"bad_data","error":"$msg"}""")
-          }
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", ctype)
-        ex.sendResponseHeaders(code, bytes.length.toLong)
-        val os = ex.getResponseBody
-        try os.write(bytes) finally os.close()
-      }
-    }
-
   /** One `ChunkedReadResponse` frame per series: rows arrive sorted by
     * (seriesKey, chunk) with encoded XOR chunk bytes; consecutive rows
     * of one series fold into one frame's chunk list (protobuf-JSON
     * field names; `data` is base64, the JSON bytes mapping). */
   private[metrics] def chunkedReadFrames(rows: Array[Row],
-      metricCol: String, seriesKey: Seq[String], queryIndex: Int): Seq[String] = {
-    val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[(String, String)], scala.collection.mutable.ArrayBuffer[Row]]
-    rows.foreach { r =>
-      val ls = seriesKey.map { k =>
-        (if (k == metricCol) "__name__" else k) ->
-          String.valueOf(r.getAs[Any](k))
-      }
-      grouped.getOrElseUpdate(ls,
-        scala.collection.mutable.ArrayBuffer.empty) += r
-    }
-    grouped.map { case (ls, rs) =>
-      val labels = ls.map { case (n, v) =>
-        s"""{"name":"${jsonEscape(n)}","value":"${jsonEscape(v)}"}"""
-      }.mkString("[", ",", "]")
+      metricCol: String, seriesKey: Seq[String], queryIndex: Int): Seq[String] =
+    bySeries(rows, metricCol, seriesKey).map { case (ls, rs) =>
       val chunks = rs.map { r =>
         val b64 = java.util.Base64.getEncoder
           .encodeToString(r.getAs[Array[Byte]]("__data"))
@@ -1149,10 +1131,9 @@ object MetricsServer {
           s""""maxTimeMs":${r.getAs[Long]("__max_t")},""" +
           s""""type":"XOR","data":"$b64"}"""
       }.mkString("[", ",", "]")
-      s"""{"chunkedSeries":[{"labels":$labels,"chunks":$chunks}],""" +
+      s"""{"chunkedSeries":[{"labels":${labelPairsJson(ls)},"chunks":$chunks}],""" +
         s""""queryIndex":$queryIndex}"""
-    }.toSeq
-  }
+    }
 
   /** [[chunkedReadFrames]]'s real-bytes twin: one `ChunkedReadResponse`
     * protobuf message per series (same grouping), chunk type XOR = 1,
@@ -1161,150 +1142,15 @@ object MetricsServer {
   private[metrics] def chunkedReadPb(rows: Array[Row], metricCol: String,
       seriesKey: Seq[String], queryIndex: Int): Seq[Array[Byte]] = {
     import graft.functions.ProtoWire
-    val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[(String, String)], scala.collection.mutable.ArrayBuffer[Row]]
-    rows.foreach { r =>
-      val ls = seriesKey.map { k =>
-        (if (k == metricCol) "__name__" else k) ->
-          String.valueOf(r.getAs[Any](k))
-      }
-      grouped.getOrElseUpdate(ls,
-        scala.collection.mutable.ArrayBuffer.empty) += r
-    }
-    grouped.map { case (ls, rs) =>
+    bySeries(rows, metricCol, seriesKey).map { case (ls, rs) =>
       ProtoWire.encodeChunkedReadResponse(ProtoWire.ChunkedReadResponsePb(
         Seq(ProtoWire.ChunkedSeriesPb(
           ls.map { case (n, v) => ProtoWire.Label(n, v) },
-          rs.toSeq.map(r => ProtoWire.ChunkPb(
+          rs.map(r => ProtoWire.ChunkPb(
             r.getAs[Long]("__min_t"), r.getAs[Long]("__max_t"), 1,
             scala.collection.immutable.ArraySeq
               .unsafeWrapArray(r.getAs[Array[Byte]]("__data")))))),
         queryIndex.toLong))
-    }.toSeq
+    }
   }
-
-  /** Raw-bytes variant for wire receivers that must see the body
-    * unmangled (a UTF-8 String round-trip corrupts protobuf/snappy
-    * bytes) plus the Content-Encoding/Content-Type headers that select
-    * the decode path. Same Prometheus-style error envelope. */
-  private def rawBodyHandler(f: (Option[String], Option[String], Array[Byte]) => String): HttpHandler =
-    new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (code, body) =
-          try {
-            val enc = Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
-            val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-            (200, f(enc, ct, ex.getRequestBody.readAllBytes()))
-          } catch {
-            case e: Throwable =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (400, s"""{"status":"error","errorType":"bad_data","error":"$msg"}""")
-          }
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(code, bytes.length.toLong)
-        val os = ex.getResponseBody
-        try os.write(bytes) finally os.close()
-      }
-    }
-
-  /** Raw-request, BINARY-response variant (the protobuf remote-read
-    * face): f(contentEncoding, rawBody) → (contentType, optional
-    * response Content-Encoding, bytes). Errors keep the JSON envelope. */
-  private def rawBodyHandlerBin(
-      f: (Option[String], Array[Byte]) => (String, Option[String], Array[Byte])): HttpHandler =
-    new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (code, ctype, cenc, bytes) =
-          try {
-            val enc = Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
-            val (ct, ce, b) = f(enc, ex.getRequestBody.readAllBytes())
-            (200, ct, ce, b)
-          } catch {
-            case e: ResultTooLarge =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (422, "application/json", None,
-                s"""{"status":"error","errorType":"too_many_results","error":"$msg"}"""
-                  .getBytes("UTF-8"))
-            case e: Throwable =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (400, "application/json", None,
-                s"""{"status":"error","errorType":"bad_data","error":"$msg"}"""
-                  .getBytes("UTF-8"))
-          }
-        ex.getResponseHeaders.set("Content-Type", ctype)
-        cenc.foreach(ex.getResponseHeaders.set("Content-Encoding", _))
-        ex.sendResponseHeaders(code, bytes.length.toLong)
-        val os = ex.getResponseBody
-        try os.write(bytes) finally os.close()
-      }
-    }
-
-  /** Wraps a request-BODY → JSON function (ingest receivers: remote
-    * write, OTLP). Same Prometheus-style error envelope. */
-  private def bodyHandler(f: String => String): HttpHandler =
-    new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (code, body) =
-          try {
-            val in = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-            (200, f(in))
-          } catch {
-            case e: Throwable =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (400, s"""{"status":"error","errorType":"bad_data","error":"$msg"}""")
-          }
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(code, bytes.length.toLong)
-        val os = ex.getResponseBody
-        try os.write(bytes) finally os.close()
-      }
-    }
-
-  /** [[jsonHandler]] that also passes the request path (for path-shaped
-    * endpoints like `/api/v1/label/<name>/values`). */
-  private def jsonHandler2(f: (String, Map[String, String]) => String): HttpHandler =
-    new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (code, body) =
-          try {
-            // keys are percent-decoded too: spec-conformant clients send
-            // match%5B%5D= for match[]=
-            def parseForm(s: String): Map[String, String] =
-              s.split("&").filter(_.nonEmpty).map { kv =>
-                val eq = kv.indexOf('=')
-                val k = java.net.URLDecoder
-                  .decode(if (eq < 0) kv else kv.substring(0, eq), "UTF-8")
-                val v = if (eq < 0) "" else java.net.URLDecoder
-                  .decode(kv.substring(eq + 1), "UTF-8")
-                k -> v
-              }.toMap
-            val urlParams =
-              parseForm(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-            // POST with a form body (upstream api.go reads r.Form, which
-            // merges both; Grafana POSTs long queries this way) — body
-            // params win over URL params, as ParseForm's ordering does
-            val bodyParams =
-              if (ex.getRequestMethod == "POST" &&
-                Option(ex.getRequestHeaders.getFirst("Content-Type"))
-                  .exists(_.startsWith("application/x-www-form-urlencoded")))
-                parseForm(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
-              else Map.empty[String, String]
-            (200, f(ex.getRequestURI.getPath, urlParams ++ bodyParams))
-          } catch {
-            case e: ResultTooLarge =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (422, s"""{"status":"error","errorType":"too_many_results","error":"$msg"}""")
-            case e: Throwable =>
-              val msg = jsonEscape(String.valueOf(e.getMessage))
-              (400, s"""{"status":"error","errorType":"bad_data","error":"$msg"}""")
-          }
-        val bytes = body.getBytes("UTF-8")
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(code, bytes.length.toLong)
-        val os = ex.getResponseBody
-        try os.write(bytes) finally os.close()
-      }
-    }
 }

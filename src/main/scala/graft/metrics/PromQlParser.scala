@@ -1764,8 +1764,6 @@ object PromQlParser {
         s"expected a series selector, got $other")
     }
 
-  /** The distinct series (label sets) a plain selector matches — the
-    * `/api/v1/series` metadata contract. One distinct-aggregation plan. */
   /** Parse a plain series selector into matcher triples (label, op,
     * value) for the tombstone/admin path; the bare metric name becomes an
     * equality on `src.metricCol` and `__name__` matchers rebind to it.
@@ -1784,15 +1782,19 @@ object PromQlParser {
         s"match[] must be a plain series selector, got $other")
     }
 
-  def seriesFor(src: PromSource, selector: String): DataFrame =
-    parse(selector) match {
-      case sel: Selector =>
-        src.df.filter(matcherCond(src, sel))
-          .select(src.seriesKey.map(labelCol): _*)
-          .distinct().orderBy(src.seriesKey.map(labelCol): _*)
+  /** The distinct series (label sets) matching ANY of the plain
+    * selectors — the `/api/v1/series` metadata contract (upstream returns
+    * the union of every match[]). One distinct-aggregation plan. */
+  def seriesFor(src: PromSource, selectors: Seq[String]): DataFrame = {
+    val cond = selectors.map(parse(_) match {
+      case sel: Selector => matcherCond(src, sel)
       case other => throw new IllegalArgumentException(
         s"match[] must be a plain series selector, got $other")
-    }
+    }).reduce(_ || _)
+    src.df.filter(cond)
+      .select(src.seriesKey.map(labelCol): _*)
+      .distinct().orderBy(src.seriesKey.map(labelCol): _*)
+  }
 
   private def compile(src: PromSource, ast: Ast, evalTs: String,
                       lookback: String): DataFrame = ast match {

@@ -75,13 +75,7 @@ object RemoteRead {
   def selectorString(matchers: Seq[(String, String, String)]): String = {
     if (matchers.isEmpty)
       throw new IllegalArgumentException("remote-read query has no matchers")
-    def esc(v: String): String = v.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case c => c.toString
-    }
-    matchers.map { case (n, op, v) => s"""$n$op"${esc(v)}"""" }
+    matchers.map { case (n, op, v) => s"""$n$op"${MetricsServer.promEscape(v)}"""" }
       .mkString("{", ",", "}")
   }
 }

@@ -1110,4 +1110,109 @@ class MetricsSpec extends AnyFunSuite {
       } finally srv.close()
     }
   }
+
+  /** One HTTP exchange: status, Content-Type, Content-Encoding, body. */
+  private def exchange(port: Int, pathAndQuery: String,
+                       body: Option[Array[Byte]] = None,
+                       headers: Seq[(String, String)] = Nil)
+      : (Int, String, Option[String], Array[Byte]) = {
+    val conn = new java.net.URI(s"http://127.0.0.1:$port$pathAndQuery").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
+    body.foreach { b =>
+      conn.setRequestMethod("POST"); conn.setDoOutput(true)
+      val os = conn.getOutputStream
+      try os.write(b) finally os.close()
+    }
+    val code = conn.getResponseCode
+    val in = if (code == 200) conn.getInputStream else conn.getErrorStream
+    (code, conn.getContentType, Option(conn.getHeaderField("Content-Encoding")),
+      in.readAllBytes())
+  }
+
+  test("repeated match[]: series returns every selector's series, delete_series masks them all") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val df = Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "cpu", 7.0),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 2L, "mem", 3.0),
+      (3L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 3L, "disk", 5.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val src = PromQlParser.PromSource(df, "event_type",
+      Seq("user_id", "event_type"), "ts", "event_id", "value")
+    val two = "match[]=cpu&match[]=" + enc("""{event_type="mem"}""")
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(src))
+      try {
+        val (cs, bs) = call(srv.boundPort, "/api/v1/series?" + two)
+        assert(cs == 200 && bs.contains("\"cpu\"") && bs.contains("\"mem\"") &&
+          !bs.contains("disk"), bs)
+        // federate reads match[] from a POST form body too
+        val (cf, bf) = call(srv.boundPort, "/federate",
+          Some(two + "&time=2024-01-01T10:02:00Z"))
+        assert(cf == 200 && bf.contains("cpu{") && bf.contains("mem{") &&
+          !bf.contains("disk"), bf)
+        // a non-selector is still refused
+        val (cn, _) = call(srv.boundPort, "/api/v1/series?match[]=cpu&match[]=" +
+          enc("sum(cpu)"))
+        assert(cn == 400)
+        val (cd, bd) = call(srv.boundPort, "/api/v1/admin/tsdb/delete_series?" + two)
+        assert(cd == 200, bd)
+        val (ca, ba) = call(srv.boundPort, "/api/v1/series?match[]=" +
+          enc("""{event_type=~".+"}"""))
+        assert(ca == 200 && ba.contains("disk") && !ba.contains("cpu") &&
+          !ba.contains("mem"), ba)
+      } finally srv.close()
+    }
+  }
+
+  test("every reply family: status and envelope on one success and one error") {
+    import graft.functions.{ProtoWire, Snappy}
+    def bytes(s: String) = Some(s.getBytes("UTF-8"))
+    def otlp(ts: String) = bytes(
+      """{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"name":"o","gauge":""" +
+        s"""{"dataPoints":[{"timeUnixNano":"$ts","asDouble":1.0}]}}]}]}]}""")
+    val readPb = Some(Snappy.compress(ProtoWire.encodeReadRequest(
+      ProtoWire.ReadRequestPb(Seq(ProtoWire.ReadQueryPb(0L, 9999999999999L,
+        Seq(ProtoWire.MatcherPb(0, "__name__", "cpu")))), acceptedTypes = Seq(0)))))
+    def readJson(mtype: String) = bytes(
+      s"""{"queries":[{"matchers":[{"type":"$mtype","name":"__name__","value":"cpu"}]}]}""")
+    val notSnappy = Some(Array[Byte](0x63, 0x10, 0x41))
+    val form = Seq("Content-Type" -> "application/x-www-form-urlencoded")
+    val snappy = Seq("Content-Encoding" -> "snappy",
+      "Content-Type" -> "application/x-protobuf")
+    val at = "&time=2024-01-01T10:02:00Z"
+    val json = "application/json"
+    val exposition = "text/plain; version=0.0.4; charset=utf-8"
+    // family, request, then the expected status, Content-Type, Content-Encoding
+    val cases = Seq[(String, String, Option[Array[Byte]], Seq[(String, String)], Int, String, Option[String])](
+      ("JSON GET", "/api/v1/query?query=cpu" + at, None, Nil, 200, json, None),
+      ("JSON GET", "/api/v1/query?query=cpu", None, Nil, 400, json, None),
+      ("form POST", "/api/v1/query", bytes("query=cpu" + at), form, 200, json, None),
+      ("form POST", "/api/v1/query", bytes("query=sum%28" + at), form, 400, json, None),
+      ("remote write", "/api/v1/write", bytes(writeBody("w", 5L, 1.0)), Nil, 200, json, None),
+      ("remote write", "/api/v1/write", notSnappy, snappy, 400, json, None),
+      ("OTLP", "/api/v1/otlp/v1/metrics", otlp("1704103290000000000"), Nil, 200, json, None),
+      ("OTLP", "/api/v1/otlp/v1/metrics", otlp("soon"), Nil, 400, json, None),
+      ("remote read pb", "/api/v1/read", readPb, snappy, 200, "application/x-protobuf",
+        Some("snappy")),
+      ("remote read pb", "/api/v1/read", notSnappy, snappy, 400, json, None),
+      ("remote read JSON", "/api/v1/read", readJson("EQ"), Nil, 200, json, None),
+      ("remote read JSON", "/api/v1/read", readJson("XX"), Nil, 400, json, None),
+      ("federate", "/federate?match[]=cpu" + at, None, Nil, 200, exposition, None),
+      ("federate", "/federate?time=2024-01-01T10:02:00Z", None, Nil, 400,
+        "text/plain; charset=utf-8", None),
+      // /metrics reads no request input, so no request can make it fail
+      ("metrics", "/metrics", None, Nil, 200, exposition, None))
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(cpuSource))
+      try cases.foreach { case (family, path, body, headers, code, ctype, cenc) =>
+        val (c, ct, ce, b) = exchange(srv.boundPort, path, body, headers)
+        val text = new String(b, "UTF-8")
+        assert((c, ct, ce) == ((code, ctype, cenc)), s"$family $path: $text")
+        if (c != 200 && ct == json)
+          assert(text.startsWith("""{"status":"error","errorType":"bad_data","error":"""),
+            s"$family: $text")
+      } finally srv.close()
+    }
+  }
 }

@@ -10,8 +10,17 @@ of the parent commit outside the repository. For every seed it runs
 change first on even ones, so that drift of the box does not favour one
 side. It prints every pair, then per end-to-end metric of BENCHMARK.json
 each side's median and quartiles, the change/parent ratio of the medians,
-the pairs the change won, and whether the medians differ by more than the
-parent's interquartile range. It exits 1 if any run was not `correct`,
+the pairs the change won, whether the medians differ by more than the
+parent's interquartile range, and a no-regression verdict against that
+metric's `bound`:
+
+  worse       the change's median is worse than the parent's by more than
+              the bound (relative to the parent's median);
+  unresolved  the parent's IQR/median is wider than the bound, and not
+              every change run beats every parent run;
+  ok          otherwise.
+
+It exits 1 if any metric is `worse`, or if any run was not `correct`,
 failed an operation or printed no result.
 """
 import json
@@ -46,6 +55,18 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(a, b, lower, bound):
+    """`worse`, `unresolved` or `ok` for parent runs `a` and change runs `b`."""
+    (a1, a2, a3), b2 = quartiles(a), statistics.median(b)
+    loss = (b2 - a2) if lower else (a2 - b2)
+    if a2 and loss / abs(a2) > bound:
+        return "worse"
+    beats_all = max(b) < min(a) if lower else min(b) > max(a)
+    if a2 and (a3 - a1) / abs(a2) > bound and not beats_all:
+        return "unresolved"
+    return "ok"
+
+
 def main():
     if len(sys.argv) < 4:
         sys.exit(__doc__)
@@ -53,7 +74,7 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
     sides = {"parent": parent, "change": ROOT}
-    pairs, bad = [], []
+    pairs, bad, worse = [], [], []
     for seed in seeds:
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
         got = {}
@@ -76,11 +97,18 @@ def main():
         (a1, a2, a3), (b1, b2, b3) = quartiles(a), quartiles(b)
         wins = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
         ratio = b2 / a2 if a2 else float("nan")
+        v = verdict(a, b, lower, m["bound"])
+        if v == "worse":
+            worse.append(name)
         print(f"  {name}: {a2:.4g} ({a1:.4g}-{a3:.4g}) -> {b2:.4g} ({b1:.4g}-{b3:.4g})"
               f"  x{ratio:.3f}  wins {wins}/{len(pairs)}"
-              f"  |median diff| > parent IQR: {abs(b2 - a2) > a3 - a1}")
+              f"  |median diff| > parent IQR: {abs(b2 - a2) > a3 - a1}"
+              f"  bound {m['bound']}: {v}")
     if bad:
         print("\nnot correct:\n  " + "\n  ".join(bad))
+    if worse:
+        print("\nworse than the parent by more than the bound: " + ", ".join(worse))
+    if bad or worse:
         sys.exit(1)
 
 
