@@ -64,6 +64,21 @@ import scala.jdk.CollectionConverters._
   * error envelope (`/federate`: as plain text) — and is the one place a
   * reply is written.
   *
+  * Paths follow Go ServeMux's rule, as upstream's router does: a context
+  * that ends in `/` (only `/api/v1/label/`) serves its subtree, every
+  * other context serves its exact path only, and any other path answers
+  * 404 `text/plain` `404 page not found` — the JDK server alone would
+  * hand `/api/v1/labelsXYZ` to `/api/v1/labels` by string prefix.
+  *
+  * Every reply leaves with `TCP_NODELAY` on. That is JVM process state,
+  * not a Spark conf, and no query changes it: the JDK server reads
+  * `sun.net.httpserver.nodelay` once per JVM, when the first server is
+  * created, and the companion sets it to `true` (unless the JVM was
+  * started with a value) before [[MetricsServer.listen]], the one place
+  * a server is created, can run. Without it the body, written after the
+  * headers' own segment, waits behind Nagle for the client's delayed ACK:
+  * about 40 ms per reply on Linux.
+  *
   * JDK built-in `HttpServer`, zero dependencies, a pool of 4 daemon
   * handler threads sharing the one Spark session;
   * `port = 0` binds an ephemeral port (read it back via [[boundPort]]).
@@ -83,18 +98,19 @@ final class MetricsServer(observed: Observed, port: Int = 0,
 
   private val startedAtMs: Long = System.currentTimeMillis()
 
-  private val server =
-    HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
+  private val server = MetricsServer.listen(port)
   /** Binds `f` to `context` through the one request path,
     * [[MetricsServer.handler]]; `errorReply` bodies its mapped errors. */
   private def route(context: String,
                     errorReply: (Int, String, String) => Reply = MetricsServer.jsonError)(
       f: Request => Reply): Unit =
-    server.createContext(context, MetricsServer.handler(f, errorReply)): Unit
+    server.createContext(context, MetricsServer.handler(context, f, errorReply)): Unit
   /** [[route]] for a JSON endpoint: `f` renders the 200 body. */
   private def json(context: String)(f: Request => String): Unit =
     route(context)(req => Reply.json(f(req)))
 
+  // every path no other context claims: upstream's plain-text 404
+  route("/")(_ => MetricsServer.NotFound)
   route("/metrics") { _ =>
     Reply(200, MetricsServer.Exposition, MetricsServer.render(observed.snapshot))
   }
@@ -270,8 +286,7 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         !ctype.exists(_.contains("protobuf"))
       val parsed =
         if (isJson)
-          graft.sources.RemoteWrite.parse(
-            Seq(new String(body, "UTF-8")).toDF("json"))
+          graft.sources.RemoteWrite.parse(Seq(MetricsServer.jsonText(body)).toDF("json"))
         else if (isV2)
           graft.sources.RemoteWrite.parseV2Pb(Seq(body).toDF("pb"))
             .filter(!col("is_exemplar"))
@@ -285,7 +300,7 @@ final class MetricsServer(observed: Observed, port: Int = 0,
     // same ingest path through the OTLP/JSON translation.
     json("/api/v1/otlp/v1/metrics") { req =>
       import boundSrc.df.sparkSession.implicits._
-      val parsed = graft.sources.Otlp.parse(Seq(new String(req.body, "UTF-8")).toDF("json"))
+      val parsed = graft.sources.Otlp.parse(Seq(MetricsServer.jsonText(req.body)).toDF("json"))
       appendIngest(shapeIngest(parsed, "attrs"))
       """{"status":"success","data":null}"""
     }
@@ -550,8 +565,7 @@ final class MetricsServer(observed: Observed, port: Int = 0,
     // added only where the series doesn't already carry the label (the
     // upstream honor-labels federation rule).
     route("/federate", MetricsServer.textError) { req =>
-      val matches = req.all("match[]")
-      require(matches.nonEmpty, "missing 'match[]' parameter")
+      val matches = req.needAll("match[]")
       val t = MetricsServer.parseTime(req.need("time"))
       Reply(200, MetricsServer.Exposition, MetricsServer.federateText(src,
         matches, t, externalLabels, maxResultRows))
@@ -631,6 +645,17 @@ final class MetricsServer(observed: Observed, port: Int = 0,
 }
 
 object MetricsServer {
+
+  // TCP_NODELAY for every server in this JVM (see the class doc); a
+  // value the JVM was started with is kept. Calling listen runs this
+  // first, so it is set before the first server is created.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true"): Unit
+
+  /** The one place this code base creates a JDK `HttpServer`, on loopback
+    * at `port` (0 = ephemeral). A server created any other way before the
+    * first call would fix nodelay off for the whole JVM. */
+  private[graft] def listen(port: Int): HttpServer =
+    HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
 
   /** One snapshot of a server's serving state: the cleaned fold of the
     * bound frame (None = the bound frame itself), every accepted ingest
@@ -712,19 +737,45 @@ object MetricsServer {
     Reply.json(s"""{"status":"error","errorType":"$errorType","error":"${jsonEscape(msg)}"}""",
       code)
 
+  /** Upstream's answer to a path no endpoint serves (Go `http.NotFound`). */
+  private val NotFound = Reply(404, "text/plain; charset=utf-8", "404 page not found\n")
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** A JSON receiver's body as text, refused (→ 400) unless it parses as
+    * one JSON object: the JSON mappings' permissive parse would read a
+    * malformed body as zero rows and answer 200. One driver-side parse,
+    * no Spark job. */
+  private def jsonText(body: Array[Byte]): String = {
+    val root =
+      try mapper.readTree(body)
+      catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          throw new IllegalArgumentException(s"malformed JSON body: ${e.getOriginalMessage}")
+      }
+    if (!root.isObject)
+      throw new IllegalArgumentException("malformed JSON body: not a JSON object")
+    new String(body, "UTF-8")
+  }
+
   /** A plain-text error body (the `/federate` face). */
   private def textError(code: Int, errorType: String, msg: String): Reply =
     Reply(code, "text/plain; charset=utf-8", msg + "\n")
 
-  /** The one request path: parse the request, run the endpoint, map its
-    * error — [[ResultTooLarge]] → 422 `too_many_results`, anything else →
-    * 400 `bad_data`, bodied by `errorReply` — and write the reply: its
-    * headers, `sendResponseHeaders(code, length)`, one write of the body. */
-  private def handler(f: Request => Reply,
+  /** The one request path: parse the request, run the endpoint — or
+    * answer [[NotFound]] when `context` serves only its exact path and the
+    * request names another — map its error — [[ResultTooLarge]] → 422
+    * `too_many_results`, anything else → 400 `bad_data`, bodied by
+    * `errorReply` — and write the reply: its headers,
+    * `sendResponseHeaders(code, length)`, one write of the body. */
+  private def handler(context: String, f: Request => Reply,
                       errorReply: (Int, String, String) => Reply): HttpHandler = ex => {
     val reply =
-      try f(new Request(ex))
-      catch {
+      try {
+        val req = new Request(ex)
+        if (context.endsWith("/") || req.path == context) f(req) else NotFound
+      } catch {
         case e: ResultTooLarge =>
           errorReply(422, "too_many_results", String.valueOf(e.getMessage))
         case e: Throwable => errorReply(400, "bad_data", String.valueOf(e.getMessage))

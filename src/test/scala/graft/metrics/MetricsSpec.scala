@@ -663,7 +663,9 @@ class MetricsSpec extends AnyFunSuite {
         assert(c2 == 200 && b2.contains("\"2.5\""), b2)
         // a malformed body errors, doesn't wedge the server
         val (ce, _) = post(srv.boundPort, "/api/v1/write", "{nope")
-        assert(ce == 400 || ce == 200)
+        assert(ce == 400)
+        val (coe, _) = post(srv.boundPort, "/api/v1/otlp/v1/metrics", "{nope")
+        assert(coe == 400)
         val (c3, b3) = get(srv.boundPort, "/api/v1/query?query=" +
           enc("sum(cpu)") + "&time=2024-01-01T10:02:00Z")
         assert(c3 == 200 && b3.contains("\"12.0\""), b3)
@@ -1212,6 +1214,60 @@ class MetricsSpec extends AnyFunSuite {
         if (c != 200 && ct == json)
           assert(text.startsWith("""{"status":"error","errorType":"bad_data","error":"""),
             s"$family: $text")
+      } finally srv.close()
+    }
+  }
+
+  test("paths: a context serves its exact path, /api/v1/label/ its subtree, others 404") {
+    val notFound = (404, "text/plain; charset=utf-8", None, "404 page not found\n")
+    Observed.use(spark) { obs =>
+      // no exemplar frame: /api/v1/query_exemplars has no endpoint
+      val srv = new MetricsServer(obs, promSource = Some(cpuSource))
+      try {
+        Seq("/api/v1/query_exemplars?query=cpu&start=0&end=9999999999",
+            "/api/v1/labelsXYZ", "/api/v1/queryx?query=cpu&time=0", "/nope")
+          .foreach { path =>
+            val (c, ct, ce, b) = exchange(srv.boundPort, path)
+            assert((c, ct, ce, new String(b, "UTF-8")) == notFound, path)
+          }
+        val (cv, bv) = call(srv.boundPort, "/api/v1/label/user_id/values")
+        assert(cv == 200 && bv == """{"status":"success","data":["1"]}""", bv)
+        val (cl, bl) = call(srv.boundPort, "/api/v1/labels")
+        assert(cl == 200 && bl.contains("user_id"), bl)
+      } finally srv.close()
+    }
+  }
+
+  test("/federate without match[] names the parameter as /api/v1/series does") {
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(cpuSource))
+      try {
+        val (cf, bf) = call(srv.boundPort, "/federate?time=2024-01-01T10:02:00Z")
+        assert(cf == 400 && bf == "missing 'match[]' parameter\n", bf)
+        val (cs, bs) = call(srv.boundPort, "/api/v1/series")
+        assert(cs == 400 && bs.contains(""""error":"missing 'match[]' parameter""""), bs)
+      } finally srv.close()
+    }
+  }
+
+  test("nodelay: keep-alive replies wait for no delayed ACK, whatever ran first") {
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs)
+      try {
+        val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+        val req = HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${srv.boundPort}/api/v1/format_query?query=sum(cpu)")).build()
+        val ms = (1 to 20).map { _ =>
+          val t0 = System.nanoTime()
+          val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+          assert(r.statusCode == 200, r.body)
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        val median = (ms(9) + ms(10)) / 2
+        // with Nagle on, every body segment waits ~40 ms for the ACK
+        assert(median < 20.0, s"median ${median} ms over ${ms.mkString(", ")}")
+        assert(sys.props.get("sun.net.httpserver.nodelay").contains("true"))
       } finally srv.close()
     }
   }

@@ -86,8 +86,7 @@ class PromRangeSourceSpec extends AnyFunSuite {
   private def withStubServer[A](f: (String, java.util.List[String]) => A): A = {
     val seen = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.metrics.MetricsServer.listen(0)
     server.createContext("/api/v1/query_range",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         val q = ex.getRequestURI.getRawQuery

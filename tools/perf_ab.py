@@ -11,11 +11,14 @@ change first on even ones, so that drift of the box does not favour one
 side. It prints every pair, then per end-to-end metric of BENCHMARK.json
 each side's median and quartiles, the change/parent ratio of the medians,
 the pairs the change won, whether the medians differ by more than the
-parent's interquartile range, and a no-regression verdict against that
-metric's `bound`:
+parent's interquartile range, and a verdict against that metric's
+`bound`, the first of these that holds:
 
   worse       the change's median is worse than the parent's by more than
               the bound (relative to the parent's median);
+  gain        the change won at least 9 in 10 of the pairs (a tie counts
+              for neither side), and its median is better than the
+              parent's by more than the parent's interquartile range;
   unresolved  the parent's IQR/median is wider than the bound, and not
               every change run beats every parent run;
   ok          otherwise.
@@ -55,12 +58,20 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def wins(a, b, lower):
+    """Pairs in which the change run beats its parent run; ties win nothing."""
+    return sum((y < x) if lower else (y > x) for x, y in zip(a, b))
+
+
 def verdict(a, b, lower, bound):
-    """`worse`, `unresolved` or `ok` for parent runs `a` and change runs `b`."""
+    """`worse`, `gain`, `unresolved` or `ok` for paired parent runs `a` and
+    change runs `b`."""
     (a1, a2, a3), b2 = quartiles(a), statistics.median(b)
     loss = (b2 - a2) if lower else (a2 - b2)
     if a2 and loss / abs(a2) > bound:
         return "worse"
+    if 10 * wins(a, b, lower) >= 9 * len(a) and -loss > a3 - a1:
+        return "gain"
     beats_all = max(b) < min(a) if lower else min(b) > max(a)
     if a2 and (a3 - a1) / abs(a2) > bound and not beats_all:
         return "unresolved"
@@ -95,13 +106,12 @@ def main():
         a = [p["parent"][name] for p in pairs]
         b = [p["change"][name] for p in pairs]
         (a1, a2, a3), (b1, b2, b3) = quartiles(a), quartiles(b)
-        wins = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
         ratio = b2 / a2 if a2 else float("nan")
         v = verdict(a, b, lower, m["bound"])
         if v == "worse":
             worse.append(name)
         print(f"  {name}: {a2:.4g} ({a1:.4g}-{a3:.4g}) -> {b2:.4g} ({b1:.4g}-{b3:.4g})"
-              f"  x{ratio:.3f}  wins {wins}/{len(pairs)}"
+              f"  x{ratio:.3f}  wins {wins(a, b, lower)}/{len(pairs)}"
               f"  |median diff| > parent IQR: {abs(b2 - a2) > a3 - a1}"
               f"  bound {m['bound']}: {v}")
     if bad:
